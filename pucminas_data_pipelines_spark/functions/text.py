@@ -112,13 +112,6 @@ def _let(bound: Column, body) -> Column:
     return F.transform(F.array(bound), body)[0]
 
 
-def char_shingles(col: Column, n: int = 5) -> Column:
-    """Distinct character n-grams of the normalized text (array<string>).
-    Basis for MinHash/Jaccard near-dup detection."""
-    chars = F.split(normalize_text(col), "")
-    return _let(chars, lambda c: F.array_distinct(_shifted_ngrams(c, n, "")))
-
-
 def token_shingles(col: Column, n: int = 3) -> Column:
     """Distinct word n-grams (array<string>) of the normalized text."""
     toks = F.split(normalize_text(col), " ")

@@ -70,21 +70,6 @@ def cosine_from_norms(
     return F.when(~F.isnan(cos), cos)
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                a,
-                b,
-                lambda x, y: (x.cast("double") - y.cast("double"))
-                * (x.cast("double") - y.cast("double")),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def normalize(a: Column) -> Column:
     """Unit-normalize an array<float|double> into array<double>; NULL for
     a zero vector or one with NaN/Inf components (0.0/0.0 per component

@@ -1,10 +1,11 @@
-"""Reader/writer façade (reference operators O4, O5, O8, O12).
+"""Reader/writer façade (reference operators O4, O5, O8).
 
 The reference reads schema'd CSV (`sparkcode/titanic_example_delta.py:19-22`),
-creates DataFrames from local rows (`:30-34`), writes/reads Delta
-(`:25`, `:56-58`). We expose the same surface behind one façade that also
-does Parquet/JSON/ORC (driver testdata is Parquet) and degrades gracefully
-when delta-spark is absent.
+creates DataFrames from local rows (`:30-34`) and writes a table (`:25`).
+We expose the same surface behind one façade over CSV/Parquet/JSON/ORC
+(driver testdata is Parquet). The reference's Delta reads and writes —
+overwrite, MERGE, time travel — live on the versioned table,
+``operators/upsert.ManifestVersionedTable``.
 
 Scale notes: always pass an explicit schema (skips the sampling job Spark
 would otherwise run over 100 TB of input); writers accept ``partition_by``
@@ -17,8 +18,6 @@ from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-from pucminas_data_pipelines_spark.session import delta_available
 
 
 def read_csv(
@@ -39,18 +38,6 @@ def read_csv(
     )
 
 
-def read_parquet(
-    spark: SparkSession, path: str, schema: StructType | str | None = None
-) -> DataFrame:
-    """Parquet scan (primary testdata format). Schema optional: parquet is
-    self-describing, but passing one skips footer-merge planning on huge
-    directory trees."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 def read_json(
     spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:
@@ -68,26 +55,6 @@ def read_orc(
     return reader.orc(path)
 
 
-def read_delta(
-    spark: SparkSession, path: str, version_as_of: int | None = None
-) -> DataFrame:
-    """Delta scan + time travel — reference O12/O15
-    (`sparkcode/titanic_example_delta.py:56-58,63-70`).
-
-    Requires delta-spark; without it use operators.upsert.ParquetVersionedTable
-    which provides the same overwrite/merge/time-travel contract on Parquet.
-    """
-    if not delta_available():
-        raise RuntimeError(
-            "delta-spark not installed; use ParquetVersionedTable for "
-            "versioned tables on plain Parquet"
-        )
-    reader = spark.read.format("delta")
-    if version_as_of is not None:
-        reader = reader.option("versionAsOf", str(version_as_of))
-    return reader.load(path)
-
-
 def from_rows(
     spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
 ) -> DataFrame:
@@ -103,10 +70,8 @@ def write(
     partition_by: list[str] | None = None,
 ) -> None:
     """Sink façade — reference O5 (`sparkcode/titanic_example_delta.py:25`)
-    generalized to parquet/csv/json/orc/delta with append/overwrite modes
-    and hive-style partitioning."""
-    if fmt == "delta" and not delta_available():
-        raise RuntimeError("delta-spark not installed")
+    generalized to parquet/csv/json/orc with append/overwrite modes and
+    hive-style partitioning."""
     writer = df.write.format(fmt).mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)

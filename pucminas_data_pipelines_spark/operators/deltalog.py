@@ -1,9 +1,9 @@
 """Protocol-level Delta Lake transaction-log READER.
 
 The reference's distinctive layer is Delta (reference O10/O12/O15,
-sparkcode/titanic_example_delta.py:6,25,38-72); this container has no
-delta-spark, so DeltaVersionedTable's delegation is perpetually skipped.
-The LOG FORMAT, however, is public (Delta Transaction Log Protocol:
+sparkcode/titanic_example_delta.py:6,25,38-72). The engine writes its
+own versioned table (operators/upsert.ManifestVersionedTable) and needs
+no delta-spark. The Delta LOG FORMAT is public (Delta Transaction Log Protocol:
 JSON action files ``_delta_log/<20-digit version>.json`` with
 protocol / metaData / add / remove / txn actions, plus parquet
 checkpoints referenced by ``_delta_log/_last_checkpoint``) — so a

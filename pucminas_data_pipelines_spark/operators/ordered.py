@@ -62,6 +62,23 @@ def compute_boundaries(
     }
 
 
+def bucket_expr(boundaries: list[float], key: Column) -> Column:
+    """Range-bucket id of the double-valued ``key`` against literal split
+    points: the number of boundaries strictly below it, so bucket ``i``
+    holds keys in (b[i-1], b[i]]. NULL keys land in bucket 0 (the lambda
+    predicate is null per element, so the filter keeps nothing) and NaN
+    keys in the LAST bucket, matching Spark's ASC NULLS FIRST order with
+    NaN after every double. NaN split points are dropped; with none left
+    every row is bucket 0."""
+    bounds = sorted({float(b) for b in boundaries if b == b})
+    if not bounds:
+        return F.lit(0)
+    arr = F.array(*[F.lit(b) for b in bounds])
+    return F.when(F.isnan(key), F.lit(len(bounds))).otherwise(
+        F.size(F.filter(arr, lambda b: b < key))
+    )
+
+
 def with_range_buckets(
     df: DataFrame,
     key_col: str,
@@ -86,25 +103,17 @@ def with_range_buckets(
     boundaries once with :func:`compute_boundaries` on an already
     materialized frame and pass them via ``boundaries=``.
 
-    NULL keys land in bucket 0 (the lambda predicate is null per
-    element, so the filter keeps nothing) and sort first inside it —
-    consistent with Spark's default ASC NULLS FIRST global order.
-    NaN keys route to the LAST bucket, matching Spark's global ASC sort
-    (NaN orders after every double); boundary lists never contain NaN.
+    Bucket assignment is :func:`bucket_expr`: NULL keys land in bucket 0
+    and sort first inside it, NaN keys in the last bucket — consistent
+    with Spark's default global ASC NULLS FIRST order.
     """
     if materialize:
         df = df.localCheckpoint(eager=True)
     if boundaries is None:
         boundaries = compute_boundaries(df, [key_col], n_buckets)[key_col]
-    bounds = sorted({float(b) for b in boundaries if b == b})
-    if not bounds:
-        return df.withColumn(_BUCKET, F.lit(0))
-    arr = F.array(*[F.lit(float(b)) for b in bounds])
-    key = F.col(key_col).cast("double")
-    pid = F.when(F.isnan(key), F.lit(len(bounds))).otherwise(
-        F.size(F.filter(arr, lambda b: b < key))
+    return df.withColumn(
+        _BUCKET, bucket_expr(boundaries, F.col(key_col).cast("double"))
     )
-    return df.withColumn(_BUCKET, pid)
 
 
 def _bases(
@@ -226,7 +235,7 @@ def range_ntile(
     tile(rn) = ceil(rn/(q+1)) while rn <= r(q+1), else
     r + ceil((rn - r(q+1))/q). Matches SQL NTILE exactly (both engines
     verified by the stats_equidepth_histogram / events_rfm_segmentation
-    oracles).
+    oracles). Runs as :func:`grouped_range_ntile` over one constant group.
 
     The total row count rides the SAME bucket-grain partials that feed
     the base offsets (a full-frame sum over the <= n_buckets partial
@@ -235,40 +244,9 @@ def range_ntile(
     main scan being the other two), pure waste at any scale."""
     df = df.localCheckpoint(eager=True) if materialize else df
     b = with_range_buckets(df, key_col, n_buckets, boundaries=boundaries)
-    partials = b.groupBy(_BUCKET).agg(F.count(F.lit(1)).alias("_p_n"))
-    wb = Window.orderBy(_BUCKET)
-    bases = partials.select(
-        _BUCKET,
-        F.coalesce(
-            F.sum("_p_n").over(wb.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("_base_n"),
-        F.sum("_p_n")
-        .over(
-            wb.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        )
-        .alias("_n_total"),
-    )
-    wloc = Window.partitionBy(_BUCKET).orderBy(*order_cols)
-    grn = (
-        F.row_number().over(wloc) + F.coalesce(F.col("_base_n"), F.lit(0))
-    ).cast("bigint")
-    q = F.floor(F.col("_n_total") / k)
-    r = F.col("_n_total") % k
-    big = r * (q + F.lit(1))
-    tile = (
-        F.when(
-            F.col("_grn") <= big, F.ceil(F.col("_grn") / (q + F.lit(1)))
-        )
-        .otherwise(r + F.ceil((F.col("_grn") - big) / q))
-        .cast("int")
-    )
-    return (
-        b.join(F.broadcast(bases), _BUCKET, "left")
-        .withColumn("_grn", grn)
-        .withColumn(out, tile)
-        .drop(_BUCKET, "_base_n", "_n_total", "_grn")
-    )
+    return grouped_range_ntile(
+        b.withColumn("_ntile_g", F.lit(0)), "_ntile_g", order_cols, k, out=out
+    ).drop("_ntile_g")
 
 
 def grouped_range_ntile(
@@ -291,9 +269,12 @@ def grouped_range_ntile(
     The caller supplies the per-row bucket id column (``bucket_col``):
     per-group boundary lists are caller knowledge (one
     :func:`compute_boundaries` action covers all groups), and the bucket
-    assignment is a row-local CASE over them. Tile semantics per group
-    are identical to range_ntile's closed form — verified against the
-    per-tile shape by the events_rfm_segmentation oracle."""
+    assignment is a row-local CASE of :func:`bucket_expr` over them. The
+    bucket id must be non-NULL: a NULL id would miss the equi-join with
+    the bases and silently get a NULL tile, so such a row fails the query
+    instead (the check folds away when the id is provably non-NULL).
+    Tile semantics per group are the closed form documented on
+    :func:`range_ntile`."""
     partials = df.groupBy(group_col, bucket_col).agg(
         F.count(F.lit(1)).alias("_p_n")
     )
@@ -319,7 +300,13 @@ def grouped_range_ntile(
     r = F.col("_n_total") % k
     big = r * (q + F.lit(1))
     tile = (
-        F.when(F.col("_grn") <= big, F.ceil(F.col("_grn") / (q + F.lit(1))))
+        F.when(
+            F.col(bucket_col).isNull(),
+            F.raise_error(
+                F.lit(f"grouped_range_ntile: NULL bucket id in {bucket_col!r}")
+            ),
+        )
+        .when(F.col("_grn") <= big, F.ceil(F.col("_grn") / (q + F.lit(1))))
         .otherwise(r + F.ceil((F.col("_grn") - big) / q))
         .cast("int")
     )

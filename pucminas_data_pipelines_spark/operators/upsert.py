@@ -1,21 +1,21 @@
 """Versioned mutable table: the reference's distinctive Delta feature set
 (overwrite → MERGE upsert → time travel → manifest; SURVEY.md §7 M3,
 reference O5/O10/O11/O15/O16 at sparkcode/titanic_example_delta.py:25-72)
-re-expressed with a thin Parquet version directory when delta-spark is
-absent (it is, in this container).
+on plain Parquet, with no delta-spark dependency.
 
-Layout:  <path>/v=<N>/  (full snapshot per version, parquet)
-         <path>/_LATEST (text file with the max committed version)
+``ManifestVersionedTable`` is the one engine: a version is a manifest
+(bucket → data directories, schema, stats, deletion vectors) published by
+an atomic put-if-absent link, so versions share immutable data files and
+time travel is O(manifest). Append, merge and delete commit through
+optimistic concurrency (``stage_*`` / ``commit_staged``): a lost race
+rebases logically compatible work onto the winner instead of failing it.
 
-This is deliberately NOT a reimplementation of Delta's transaction log —
-a snapshot-per-version façade with last-writer-wins commit is enough to
-reproduce the reference's semantics (its job runs single-writer). When
-delta-spark IS installed, DeltaVersionedTable delegates to the real thing.
-
-Scale: MERGE is a full-outer join on the key — shuffle-partitioned on the
-merge key on both sides, or broadcast when the source is small (the
-reference's own merge has a 4-row source). Each version is a full rewrite
-here; Delta's file-level pruning is the production path.
+Scale: append is O(new data); MERGE and DELETE rewrite only the hash
+buckets the change touches (``n_buckets=1`` degenerates to a whole-table
+rewrite); reads prune by bucket, per-dir and per-file column stats.
+``version_diff`` is the row-level change set between two versions, and
+``export_delta_log*`` (operators/deltalog.py reads it back) is the
+public-format Delta interop path.
 """
 
 from __future__ import annotations
@@ -24,8 +24,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from pucminas_data_pipelines_spark.session import delta_available
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -73,173 +71,11 @@ def _reject_ambiguous_merge_source(source: DataFrame, key: str) -> None:
         )
 
 
-class ParquetVersionedTable:
-    """Overwrite / merge / time-travel façade over plain Parquet."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    # -- version bookkeeping -------------------------------------------
-    def _latest_file(self) -> str:
-        return os.path.join(self.path, "_LATEST")
-
-    def _publish_latest(self, version: int) -> None:
-        """Atomically repoint _LATEST (temp file + os.replace): a plain
-        truncate-write leaves a window where a concurrent reader — the
-        stream sources poll _LATEST every trigger — sees an EMPTY file
-        and crashes on int('') (caught live by the r12 preflight racing
-        a micro-batch against a commit)."""
-        import uuid as _uuid
-
-        tmp = f"{self._latest_file()}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._latest_file())
-
-    def latest_version(self) -> int:
-        try:
-            with open(self._latest_file()) as fh:
-                return int(fh.read().strip())
-        except FileNotFoundError:
-            return -1
-
-    def _commit(self, df: DataFrame, version: int) -> None:
-        df.write.mode("overwrite").parquet(f"{self.path}/v={version}")
-        os.makedirs(self.path, exist_ok=True)
-        self._publish_latest(version)
-
-    # -- reference operator surface ------------------------------------
-    def overwrite(self, df: DataFrame) -> int:
-        """O5: df.write.mode('overwrite') — commits a new full snapshot."""
-        version = self.latest_version() + 1
-        self._commit(df, version)
-        return version
-
-    def read(self, version_as_of: int | None = None) -> DataFrame:
-        """O12 scan / O15 time travel (versionAsOf)."""
-        version = self.latest_version() if version_as_of is None else version_as_of
-        if version < 0 or version > self.latest_version():
-            raise ValueError(f"version {version_as_of} does not exist")
-        return self.spark.read.parquet(f"{self.path}/v={version}")
-
-    def merge(
-        self,
-        source: DataFrame,
-        key: str,
-        broadcast_source: bool = True,
-    ) -> int:
-        """O11: MERGE with whenMatchedUpdateAll + whenNotMatchedInsertAll
-        (sparkcode/titanic_example_delta.py:43-51) — i.e. full upsert:
-        matched target rows take all source values; unmatched source rows
-        are inserted; unmatched target rows are kept.
-
-        Implemented as target FULL OUTER JOIN source on the key, taking the
-        source row when present else the target row. Presence is tracked
-        with a sentinel flag column, NOT by testing the source key for
-        NULL: a source row whose merge key is NULL never equi-matches, and
-        Delta's whenNotMatchedInsertAll inserts it as-is — keying presence
-        off s.<key> would instead emit a garbage all-NULL row."""
-        target = self.read()
-        cols = target.columns
-        if "_s_present" in cols:
-            # the sentinel below would silently shadow a real column of
-            # the same name (withColumn REPLACES it), corrupting merges
-            raise ValueError("column name '_s_present' is reserved by merge")
-        if source.columns != cols:
-            source = source.select(*cols)  # align schema by name
-        _reject_ambiguous_merge_source(source, key)
-        src = F.broadcast(source) if broadcast_source else source
-        t = target.alias("t")
-        s = src.withColumn("_s_present", F.lit(True)).alias("s")
-        merged = t.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "full_outer").select(
-            *[
-                F.when(F.col("s._s_present").isNotNull(), F.col(f"s.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in cols
-            ]
-        )
-        version = self.latest_version() + 1
-        self._commit(merged, version)
-        return version
-
-    def delete_where(self, condition) -> int:
-        """DELETE (Delta's third merge clause family): keep every row
-        whose condition is not TRUE. The null-safe comparison matters:
-        SQL DELETE removes only TRUE-condition rows, so a row where the
-        predicate evaluates to NULL (e.g. a NULL in the filtered column)
-        must survive — a plain ``~condition`` would drop it."""
-        kept = self.read().where(~condition.eqNullSafe(F.lit(True)))
-        version = self.latest_version() + 1
-        self._commit(kept, version)
-        return version
-
-    def history(self) -> list[int]:
-        """Surviving snapshot versions (vacuum removes expired ones)."""
-        try:
-            found = sorted(
-                int(name.split("=", 1)[1])
-                for name in os.listdir(self.path)
-                if name.startswith("v=")
-            )
-        except FileNotFoundError:
-            return []
-        return found
-
-    def vacuum(self, retain_last: int = 2) -> list[int]:
-        """Snapshot expiry (Delta VACUUM / Iceberg expire_snapshots): drop
-        every snapshot but the newest ``retain_last``, reclaiming storage
-        while keeping a bounded time-travel horizon. Returns the expired
-        version numbers; time travel to them afterwards raises, which is
-        exactly Delta's post-vacuum behavior.
-
-        Scale: at 100 TB, snapshot expiry is what keeps a
-        frequently-merged table from storing every historical byte
-        forever — retention is a policy knob traded against the
-        time-travel window the pipeline's consumers need."""
-        import shutil as _sh
-
-        if retain_last < 1:
-            # Delta never vacuums the live snapshot: retain_last=0 would
-            # delete every version while _LATEST still points at one
-            raise ValueError(f"retain_last={retain_last} must be >= 1")
-        latest = self.latest_version()
-        keep = set(range(max(0, latest - retain_last + 1), latest + 1))
-        removed: list[int] = []
-        for v in self.history():
-            if v not in keep:
-                _sh.rmtree(f"{self.path}/v={v}", ignore_errors=True)
-                removed.append(v)
-        return removed
-
-    def generate_manifest(self) -> str:
-        """O16: symlink-format manifest (list of data files of the latest
-        snapshot, for external Hive/Presto/Athena catalogs)."""
-        version_dir = f"{self.path}/v={self.latest_version()}"
-        files = sorted(
-            os.path.join(version_dir, f)
-            for f in os.listdir(version_dir)
-            if f.endswith(".parquet")
-        )
-        manifest_dir = os.path.join(self.path, "_symlink_format_manifest")
-        os.makedirs(manifest_dir, exist_ok=True)
-        manifest = os.path.join(manifest_dir, "manifest")
-        import uuid as _uuid
-
-        tmp = f"{manifest}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(files) + "\n")
-        os.replace(tmp, manifest)  # external catalogs never see a torn list
-        return manifest
-
-
 class ManifestVersionedTable:
     """Versioned table where a version is a FILE LIST, not a snapshot
     copy — the Delta/Iceberg idea (reference O5/O10/O11/O15/O16,
     sparkcode/titanic_example_delta.py:25-72) implemented at hash-bucket
-    granularity, closing ParquetVersionedTable's documented O(table)-per-
-    commit scale hole while staying a few hundred lines of plain Parquet.
+    granularity, so a commit costs O(changed buckets), not O(table).
 
     Layout::
 
@@ -266,9 +102,7 @@ class ManifestVersionedTable:
     find buckets containing matches, then rewrites only those. VACUUM
     reference-counts bucket directories across surviving manifests and
     removes only unshared ones — exactly Delta's log-then-vacuum
-    contract. Same single-writer commit discipline as the snapshot
-    façade (the reference's job is single-writer); the real transaction
-    log for concurrent writers remains delta-spark's job."""
+    contract."""
 
     def __init__(
         self, spark: SparkSession, path: str, key: str, n_buckets: int = 16
@@ -548,9 +382,9 @@ class ManifestVersionedTable:
     @staticmethod
     def _align_columns(df: DataFrame, manifest: dict) -> DataFrame:
         """Reorder df's columns to the table's layout; REFUSE a different
-        column SET or different column TYPES. Stricter than the snapshot
-        façade's silent select-projection: an append/merge source
-        carrying extra columns almost always means the caller expected
+        column SET or different column TYPES. Stricter than a silent
+        select-projection: an append/merge source carrying extra columns
+        almost always means the caller expected
         schema evolution, and silently dropping the extras would lose
         data without a trace — evolve the schema with an explicit
         ``overwrite`` instead. Types are enforced too (Delta's schema
@@ -1520,10 +1354,10 @@ class ManifestVersionedTable:
         merge_schema: bool = False,
     ) -> int:
         """O11: whenMatchedUpdateAll + whenNotMatchedInsertAll, rewriting
-        ONLY the buckets the source touches (same full-outer-join +
-        sentinel-presence semantics as ParquetVersionedTable.merge —
-        differential-tested against it). ``txn_app``/``txn_version`` is
-        the same idempotent-writer handshake as append's (Delta's
+        ONLY the buckets the source touches (full-outer-join +
+        sentinel-presence semantics, differential-tested against a
+        plain-Python model). ``txn_app``/``txn_version`` is the same
+        idempotent-writer handshake as append's (Delta's
         txnAppId/txnVersion works on ANY write): a replayed epoch whose
         version was already committed is a no-op — what makes a
         foreachBatch MERGE sink exactly-once, e.g. incremental silver-
@@ -3373,72 +3207,9 @@ class ManifestVersionedTable:
         return written
 
 
-class DeltaVersionedTable:
-    """Same method surface as ParquetVersionedTable, delegating to real
-    Delta Lake (reference O5/O10/O11/O15/O16,
-    sparkcode/titanic_example_delta.py:25-72). Requires the delta-spark
-    package and a Delta-enabled session (session.get_spark does both when
-    the library is importable)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path.rstrip("/")
-
-    def _table(self):
-        from delta.tables import DeltaTable  # O10: DeltaTable.forPath
-
-        return DeltaTable.forPath(self.spark, self.path)
-
-    def latest_version(self) -> int:
-        hist = self._table().history(1).select("version").collect()
-        return int(hist[0][0]) if hist else -1
-
-    def overwrite(self, df: DataFrame) -> int:
-        """O5: delta overwrite (titanic_example_delta.py:25)."""
-        df.write.format("delta").mode("overwrite").save(self.path)
-        return self.latest_version()
-
-    def read(self, version_as_of: int | None = None) -> DataFrame:
-        """O12 scan / O15 time travel (titanic_example_delta.py:56-70)."""
-        reader = self.spark.read.format("delta")
-        if version_as_of is not None:
-            reader = reader.option("versionAsOf", str(version_as_of))
-        return reader.load(self.path)
-
-    def merge(
-        self,
-        source: DataFrame,
-        key: str,
-        broadcast_source: bool = True,
-    ) -> int:
-        """O11: whenMatchedUpdateAll + whenNotMatchedInsertAll
-        (titanic_example_delta.py:43-51); Delta broadcasts a small source
-        on its own, so broadcast_source is accepted for surface parity."""
-        (
-            self._table()
-            .alias("t")
-            .merge(source.alias("s"), f"t.{key} = s.{key}")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-        return self.latest_version()
-
-    def delete_where(self, condition) -> int:
-        self._table().delete(condition)
-        return self.latest_version()
-
-    def history(self) -> list[int]:
-        rows = self._table().history().select("version").collect()
-        return sorted(int(r[0]) for r in rows)
-
-    def generate_manifest(self) -> str:
-        """O16: symlink manifest (titanic_example_delta.py:72)."""
-        self._table().generate("symlink_format_manifest")
-        return os.path.join(self.path, "_symlink_format_manifest")
-
-
-def version_diff(table, key: str, from_version: int, to_version: int) -> DataFrame:
+def version_diff(
+    table: ManifestVersionedTable, key: str, from_version: int, to_version: int
+) -> DataFrame:
     """CDC: row-level changes between two snapshots — the analogue of Delta
     Change Data Feed's ``table_changes(t, from, to)`` on the versioned-table
     surface (reference O15's time travel makes both endpoints readable;
@@ -3455,36 +3226,34 @@ def version_diff(table, key: str, from_version: int, to_version: int) -> DataFra
     full snapshots; the two-snapshot join is the general fallback and is
     linear in snapshot size — no all-pairs, survives wide tables.
 
-    MANIFEST FAST PATH: on a ManifestVersionedTable, rows can only differ
-    in buckets whose file lists differ between the two manifests (files
-    are immutable and a key's bucket is fixed), so both sides restrict to
-    the CHANGED buckets — diff cost O(changed buckets), not O(table),
+    MANIFEST FAST PATH: rows can only differ in buckets whose file lists
+    differ between the two manifests (files are immutable and a key's
+    bucket is fixed), so both sides restrict to the CHANGED buckets —
+    diff cost O(changed buckets), not O(table),
     which is what makes downstream incremental view maintenance
     (operators/incremental.py) refresh at O(changes). The path requires
     equal deletion-vector lists and an unevolved schema between the two
     versions; anything else falls back to the full-snapshot diff.
     """
-    pre = post = None
-    if hasattr(table, "_manifest") and hasattr(table, "_bucket_dirs"):
-        m_from = table._manifest(from_version)
-        m_to = table._manifest(to_version)
-        if (
-            m_from.get("deletion_vectors", []) == m_to.get("deletion_vectors", [])
-            and m_from["n_buckets"] == m_to["n_buckets"]
-            and m_from["columns"] == m_to["columns"]
-            # mid-rebucket endpoints: rows move between generations with
-            # no logical change — the bucket-grain fast path would emit
-            # phantoms; the full-snapshot diff below stays correct
-            and "rebucket_target" not in m_from
-            and "rebucket_target" not in m_to
-        ):
-            bf, bt = m_from["buckets"], m_to["buckets"]
-            changed = sorted(
-                b for b in set(bf) | set(bt) if bf.get(b) != bt.get(b)
-            )
-            pre = table._read_dirs(m_from, table._bucket_dirs(bf, changed))
-            post = table._read_dirs(m_to, table._bucket_dirs(bt, changed))
-    if pre is None:
+    m_from = table._manifest(from_version)
+    m_to = table._manifest(to_version)
+    if (
+        m_from.get("deletion_vectors", []) == m_to.get("deletion_vectors", [])
+        and m_from["n_buckets"] == m_to["n_buckets"]
+        and m_from["columns"] == m_to["columns"]
+        # mid-rebucket endpoints: rows move between generations with
+        # no logical change — the bucket-grain fast path would emit
+        # phantoms; the full-snapshot diff below stays correct
+        and "rebucket_target" not in m_from
+        and "rebucket_target" not in m_to
+    ):
+        bf, bt = m_from["buckets"], m_to["buckets"]
+        changed = sorted(
+            b for b in set(bf) | set(bt) if bf.get(b) != bt.get(b)
+        )
+        pre = table._read_dirs(m_from, table._bucket_dirs(bf, changed))
+        post = table._read_dirs(m_to, table._bucket_dirs(bt, changed))
+    else:
         pre = table.read(version_as_of=from_version)
         post = table.read(version_as_of=to_version)
     cols = pre.columns
@@ -3520,14 +3289,6 @@ def version_diff(table, key: str, from_version: int, to_version: int) -> DataFra
     )
     exploded = joined.select(F.explode(changes).alias("c"))
     return exploded.select(F.col("c.row.*"), F.col("c._change_type"))
-
-
-def versioned_table(spark: SparkSession, path: str):
-    """Factory: real Delta table when the library exists, Parquet façade
-    otherwise (same method surface)."""
-    if delta_available():  # pragma: no cover - delta not in this container
-        return DeltaVersionedTable(spark, path)
-    return ParquetVersionedTable(spark, path)
 
 
 def scd2_apply(

@@ -1084,14 +1084,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _bucket_case(v):
         pid = None
         for key, col in (("r", "recency_s"), ("f", "_negf"), ("m", "_negm")):
-            bounds = sorted({float(x) for x in bl[col] if x == x})
-            if bounds:
-                arr = F.array(*[F.lit(b) for b in bounds])
-                expr = F.when(F.isnan(v), F.lit(len(bounds))).otherwise(
-                    F.size(F.filter(arr, lambda b: b < v))
-                )
-            else:
-                expr = F.lit(0)
+            expr = ORD.bucket_expr(bl[col], v)
             pid = (
                 F.when(F.col("_k") == key, expr)
                 if pid is None
@@ -1111,7 +1104,7 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("_e"),
     ).select("user_id", "_e._k", "_e._v")
-    stacked = stacked.withColumn("_rb", _bucket_case(F.col("_v").cast("double")))
+    stacked = stacked.withColumn("_rb", _bucket_case(F.col("_v")))
     u = ORD.grouped_range_ntile(
         stacked, "_k", ["_v", "user_id"], 4, out="_s", bucket_col="_rb"
     )

@@ -1,7 +1,10 @@
 """Mutation-layer queries: the reference's signature scenario — overwrite
 → filter+rewrite → union new rows → MERGE upsert → time travel → delete —
-replayed on the Parquet versioned-table façade (operators/upsert.py;
-reference sparkcode/titanic_example_delta.py:25-70).
+replayed on the versioned table, ``ManifestVersionedTable``
+(operators/upsert.py; reference sparkcode/titanic_example_delta.py:25-70).
+The reference-scenario queries run it with ``n_buckets=1``, where every
+commit rewrites the whole table; the ``mutation_manifest_*`` family
+exercises the bucketed, file-sharing commit layer.
 
 These queries are self-contained (in-code fixture, deterministic), so the
 oracle is a literal VALUES table of the expected post-state — a real
@@ -9,6 +12,7 @@ end-to-end check of merge semantics, not just a rows-count."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,7 +25,7 @@ from pucminas_data_pipelines_spark.fixtures import (
 )
 from pucminas_data_pipelines_spark.io import from_rows
 from pucminas_data_pipelines_spark.operators.upsert import (
-    ParquetVersionedTable,
+    ManifestVersionedTable,
     version_diff,
 )
 from pucminas_data_pipelines_spark.plans.registry import query
@@ -74,21 +78,6 @@ def _expected_merged() -> list[tuple]:
     return merged + list(TITANIC_NEW_ROWS)
 
 
-def _run_scenario(spark: SparkSession, path: str) -> ParquetVersionedTable:
-    """Replays sparkcode/titanic_example_delta.py:25-51 on the façade:
-    overwrite v0 → (keys 1,5 → Survived=1) ∪ (rows 892,893) → MERGE."""
-    shutil.rmtree(path, ignore_errors=True)
-    base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
-    table = ParquetVersionedTable(spark, path)
-    table.overwrite(base)  # version 0 (reference O5)
-    changed = base.where(F.col("PassengerId").isin(1, 5)).withColumn(
-        "Survived", F.lit(1)
-    )  # O6 + O7
-    newrows = from_rows(spark, TITANIC_NEW_ROWS, TITANIC_DDL)  # O8
-    table.merge(changed.union(newrows), key="PassengerId")  # O9 + O11 → version 1
-    return table
-
-
 def _lowered(df: DataFrame) -> DataFrame:
     return df.select(
         *[F.col(c).alias(c.lower()) for c in df.columns]
@@ -102,7 +91,9 @@ def _lowered(df: DataFrame) -> DataFrame:
 def mutation_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-MERGE table state (reference O11 semantics:
     whenMatchedUpdateAll + whenNotMatchedInsertAll)."""
-    table = _run_scenario(spark, "/root/repo/.tmp/titanic_merge")
+    table = _run_manifest_scenario(
+        spark, "/root/repo/.tmp/titanic_merge", n_buckets=1
+    )
     return _lowered(table.read())
 
 
@@ -113,7 +104,9 @@ def mutation_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mutation_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """versionAsOf=0 read after the merge (reference O15): the pre-merge
     snapshot must be intact."""
-    table = _run_scenario(spark, "/root/repo/.tmp/titanic_timetravel")
+    table = _run_manifest_scenario(
+        spark, "/root/repo/.tmp/titanic_timetravel", n_buckets=1
+    )
     return _lowered(table.read(version_as_of=0))
 
 
@@ -163,7 +156,9 @@ def mutation_cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-delete snapshot (v2) — inserts, update pre/post pairs, and
     deletes in one pass, unchanged rows silent. Delta surface this maps
     to: ``table_changes`` with readChangeFeed."""
-    table = _run_scenario(spark, "/root/repo/.tmp/titanic_cdc")
+    table = _run_manifest_scenario(
+        spark, "/root/repo/.tmp/titanic_cdc", n_buckets=1
+    )
     table.delete_where(F.col("Survived") == 0)  # → version 2
     diff = version_diff(table, key="PassengerId", from_version=0, to_version=2)
     return (
@@ -183,8 +178,10 @@ def mutation_cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mutation_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE WHERE survived = 0 on top of the merged state (the Delta
-    delete clause family on the Parquet façade)."""
-    table = _run_scenario(spark, "/root/repo/.tmp/titanic_delete")
+    delete clause family)."""
+    table = _run_manifest_scenario(
+        spark, "/root/repo/.tmp/titanic_delete", n_buckets=1
+    )
     table.delete_where(F.col("Survived") == 0)
     return _lowered(table.read())
 
@@ -202,30 +199,31 @@ def mutation_manifest_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O16: symlink-format manifest export (reference
     sparkcode/titanic_example_delta.py:72 — GENERATE
     symlink_format_manifest for external Hive/Presto/Athena catalogs),
-    on the Parquet façade (operators/upsert.py generate_manifest).
+    via operators/upsert.py generate_manifest on a one-bucket table.
 
     Deterministic contract checked end-to-end: two overwrites (v0 with 3
     files, v1 with 2), then the manifest must list exactly the LATEST
-    snapshot's data files — 2 distinct lines, all ``.parquet``, all under
-    ``v=1/`` — never the superseded v0 files. Emitted as one summary row
-    (counts + invariants) so the oracle is a literal VALUES check; the
-    raw manifest paths contain nondeterministic part-file UUIDs and are
-    asserted structurally instead."""
+    version's data files — 2 distinct lines, all ``.parquet``, all inside
+    the latest manifest's bucket dirs — never the superseded v0 files.
+    Emitted as one summary row (counts + invariants) so the oracle is a
+    literal VALUES check; the raw manifest paths contain nondeterministic
+    part-file UUIDs and are asserted structurally instead."""
     path = "/root/repo/.tmp/titanic_manifest"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
-    table = ParquetVersionedTable(spark, path)
+    table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=1)
     table.overwrite(base.repartition(3))  # v0: superseded snapshot
     table.overwrite(base.repartition(2))  # v1: latest — manifest target
     manifest = table.generate_manifest()
     with open(manifest) as fh:
         lines = [ln for ln in fh.read().splitlines() if ln]
-    latest_dir = f"{table.path}/v={table.latest_version()}/"
+    latest = table._manifest(table.latest_version())
+    latest_dirs = {table._abs(d) for d in table._all_dirs(latest)}
     row = (
         len(lines),
         len(set(lines)),
         all(ln.endswith(".parquet") for ln in lines),
-        all(ln.startswith(latest_dir) for ln in lines),
+        all(os.path.dirname(ln) in latest_dirs for ln in lines),
     )
     return spark.createDataFrame(
         [row],
@@ -471,7 +469,7 @@ def mutation_scd2_asof_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mutation_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot expiry (VACUUM / expire_snapshots): four committed
-    versions, retention 2 — versions 0-1 must be gone (directory removed,
+    versions, retention 2 — versions 0-1 must be gone (manifest dropped,
     time travel raises) while 2-3 stay readable; the literal oracle pins
     the full survive/readable matrix. Completes the versioned-table
     lifecycle: commit → merge → time-travel → manifest → EXPIRE.
@@ -479,13 +477,9 @@ def mutation_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note in operators/upsert.vacuum: retention bounds storage on a
     frequently-merged 100 TB table; the tradeoff is the time-travel
     horizon consumers keep."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ParquetVersionedTable,
-    )
-
     path = "/root/repo/.tmp/expiry_table"
     shutil.rmtree(path, ignore_errors=True)
-    t = ParquetVersionedTable(spark, path)
+    t = ManifestVersionedTable(spark, path, key="n_nationkey")
     base = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     for v in range(4):
         t.overwrite(base.withColumn("rev", F.lit(v)))
@@ -509,26 +503,23 @@ def mutation_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _run_manifest_scenario(
     spark: SparkSession, path: str, n_buckets: int = 4
-) -> "ManifestVersionedTable":
+) -> ManifestVersionedTable:
     """The reference's merge scenario (sparkcode/titanic_example_delta.py:
     25-51) replayed on the manifest table: overwrite v0 → (keys 1,5 →
     Survived=1) ∪ (rows 892,893) → MERGE (rewrites only the source's
-    buckets; untouched buckets share v0's files)."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
+    buckets; untouched buckets share v0's files — with ``n_buckets=1``
+    the merge rewrites the whole table)."""
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(
         spark, path, key="PassengerId", n_buckets=n_buckets
     )
-    table.overwrite(base)  # version 0
+    table.overwrite(base)  # version 0 (reference O5)
     changed = base.where(F.col("PassengerId").isin(1, 5)).withColumn(
         "Survived", F.lit(1)
-    )
-    newrows = from_rows(spark, TITANIC_NEW_ROWS, TITANIC_DDL)
-    table.merge(changed.union(newrows))  # version 1
+    )  # O6 + O7
+    newrows = from_rows(spark, TITANIC_NEW_ROWS, TITANIC_DDL)  # O8
+    table.merge(changed.union(newrows))  # O9 + O11 → version 1
     return table
 
 
@@ -538,8 +529,8 @@ def _run_manifest_scenario(
 )
 def mutation_manifest_merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-MERGE state on the MANIFEST table (operators/upsert.py
-    ManifestVersionedTable): identical semantics to mutation_merge_upsert
-    but the commit rewrites ONLY the hash buckets the 4-row source
+    ManifestVersionedTable): mutation_merge_upsert's scenario at four
+    buckets, so the commit rewrites ONLY the hash buckets the 4-row source
     touches and points every other bucket at version 0's files — the
     Delta add/remove-files idea that makes a small merge O(|source| +
     affected-bucket bytes) instead of O(table) at 100 TB."""
@@ -586,10 +577,6 @@ def mutation_manifest_append_pointread(
     rewritten), then read_keys([1, 892, 9999]) scans ONLY the buckets
     those keys hash into — manifest-level data skipping; the missing key
     simply matches nothing. Expected: base row 1 and appended row 892."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = "/root/repo/.tmp/titanic_mvt_append"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
@@ -649,8 +636,7 @@ def mutation_manifest_vacuum_lifecycle(
     retention 2 — version 0's manifest is dropped and ONLY bucket
     directories no surviving manifest references are removed, so v1/v2
     stay fully readable through their shared files (Delta's
-    log-then-vacuum contract; a snapshot-copy store has nothing shared
-    to protect, which is why this query runs on the manifest table)."""
+    log-then-vacuum contract)."""
     table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_vac")
     bump = from_rows(
         spark,
@@ -703,10 +689,6 @@ def mutation_manifest_timerange_scan(spark: SparkSession, sf_dir: str) -> DataFr
     Pruning-shape proof (exactly one commit-dir set scanned for an
     interior range) is pinned in tests/test_manifest_table.py."""
     import datetime as _dt
-
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
 
     path = "/root/repo/.tmp/events_mvt_range"
     shutil.rmtree(path, ignore_errors=True)
@@ -802,10 +784,6 @@ def mutation_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_rollup_delta,
         rollup_from_scratch,
     )
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = "/root/repo/.tmp/customer_mvt_rollup"
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
@@ -879,10 +857,6 @@ def mutation_incremental_rollup_minmax(
         apply_rollup_minmax_delta,
         rollup_minmax_from_scratch,
     )
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = "/root/repo/.tmp/customer_mvt_minmax"
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
@@ -972,10 +946,6 @@ def mutation_manifest_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     ~O(sqrt-of-selectivity) of the files per dimension instead of all
     of them; pruning happens at PLAN time from manifest stats — zero
     data reads for skipped files."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = "/root/repo/.tmp/orders_mvt_zorder"
     shutil.rmtree(path, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
@@ -1132,10 +1102,6 @@ def mutation_manifest_rebucket_shrink(
     table = _run_manifest_scenario(
         spark, "/root/repo/.tmp/titanic_mvt_rebucket_shrink", n_buckets=16
     )
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     before = set(
         ManifestVersionedTable._all_dirs(table._manifest(table.latest_version()))
     )
@@ -1409,10 +1375,6 @@ def mutation_manifest_concurrent_writers(
     the streaming-ingest + maintenance-job topology every lakehouse
     runs; the full rebase-vs-refuse matrix is pinned in
     tests/test_occ_resolution.py."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = "/root/repo/.tmp/titanic_mvt_occ"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
@@ -1545,9 +1507,6 @@ def mutation_manifest_shallow_clone(
     root)."""
     import shutil as _sh
 
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
     from pucminas_data_pipelines_spark.tables import load_table
 
     src_path = "/root/repo/.tmp/mvt_clone_src"
@@ -1615,9 +1574,6 @@ def mutation_manifest_check_constraint(
     the expected row counts straight from events."""
     import shutil as _sh
 
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
     from pucminas_data_pipelines_spark.tables import load_table
 
     path = "/root/repo/.tmp/mvt_check_constraint"
@@ -1683,9 +1639,6 @@ def mutation_manifest_generated_column(
     (-1, 1) row encodes the refusal outcome."""
     import shutil as _sh
 
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
     from pucminas_data_pipelines_spark.tables import load_table
 
     path = "/root/repo/.tmp/mvt_generated_col"
@@ -1747,9 +1700,6 @@ def mutation_tpch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets only; history keeps all three states time-travelable."""
     import shutil as _sh
 
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
     from pucminas_data_pipelines_spark.tables import load_table
 
     path = "/root/repo/.tmp/mvt_tpch_refresh"

@@ -942,9 +942,9 @@ def source_delta_log_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay, partition reconstruction and reader-feature refusal in
     tests/test_deltalog.py). This is the interop half of the
     reference's Delta layer: tables written by real Delta engines are
-    readable and time-travelable here, while writes go through
-    delta-spark when importable (DeltaVersionedTable) or the manifest
-    table otherwise."""
+    readable and time-travelable here, while writes go through the
+    versioned table (operators/upsert.ManifestVersionedTable), whose
+    ``export_delta_log`` writes the same public format back out."""
     import glob as _glob
     import json as _json
     import os as _os

@@ -62,6 +62,3 @@ def struct(table: str) -> StructType:
     """StructType for a registered table."""
     return StructType.fromDDL(TESTDATA_DDL[table])
 
-
-def titanic_struct() -> StructType:
-    return StructType.fromDDL(TITANIC_DDL)

@@ -2,9 +2,9 @@
 
 The reference builds its session with Delta-Lake extensions injected at
 construction time (``sparkcode/titanic_example_delta.py:4-12``). We keep the
-same shape — a single factory that owns every engine-level config — but make
-Delta optional (probed at runtime) because the engine must also run
-pure-Parquet (driver testdata is plain Parquet).
+same shape — a single factory that owns every engine-level config — on a
+plain session: the versioned table is ``operators/upsert.ManifestVersionedTable``
+over plain Parquet, so no Delta extension is needed.
 
 Scale notes (100 TB design):
 - AQE on: runtime partition coalescing + skew-join splitting replaces any
@@ -18,7 +18,6 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-import importlib.util
 import os
 
 from pyspark.sql import SparkSession
@@ -39,11 +38,6 @@ _RUNTIME_CONFS: dict[str, str] = {
     # 64 MiB threshold broadcasts every dim table even at sf 0.1.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
-
-
-def delta_available() -> bool:
-    """True if the delta-spark package is importable (it is optional)."""
-    return importlib.util.find_spec("delta") is not None
 
 
 # Sentinel conf marking a session as already engine-configured: applying
@@ -85,14 +79,12 @@ def get_spark(
     app_name: str = "pucminas-data-pipelines-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    enable_delta: bool | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or get) the engine session.
 
     Mirrors reference O1 (`sparkcode/titanic_example_delta.py:4-10`): one
-    builder owning packages/extensions/catalog config — with Delta injected
-    only when the library is actually present.
+    builder owning every engine-level config.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -110,19 +102,6 @@ def get_spark(
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-
-    if enable_delta is None:
-        enable_delta = delta_available()
-    if enable_delta:
-        # Same three configs as reference O1.
-        builder = (
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
 
     if extra_conf:
         for key, value in extra_conf.items():

@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pucminas_data_pipelines_spark.operators.upsert import ParquetVersionedTable
+from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
 from pucminas_data_pipelines_spark.session import configure_session
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,11 +191,11 @@ def run_foreachbatch_upsert(
     table_path: str,
     key: str,
     state_partitions: int | None = None,
-) -> ParquetVersionedTable:
+) -> ManifestVersionedTable:
     """foreachBatch sink: MERGE every micro-batch into a versioned table
     (idempotent upsert on the key)."""
     spark = stream_df.sparkSession
-    target = ParquetVersionedTable(spark, table_path)
+    target = ManifestVersionedTable(spark, table_path, key=key)
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         if target.latest_version() < 0:
@@ -234,10 +234,6 @@ def run_foreachbatch_manifest_ingest(
     rewrites), so ingest cost tracks stream volume, not table size —
     the property that lets a 100 TB hypertable absorb a continuous
     stream; merge/optimize compact on their own cadence."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     spark = stream_df.sparkSession
     target = ManifestVersionedTable(
         spark, table_path, key=key, n_buckets=n_buckets
@@ -478,7 +474,7 @@ def transform_with_state_available() -> bool:
     protobuf; the Python `protobuf` package is absent in this container
     (verified: the TWS driver worker crashes with `cannot import
     'descriptor' from 'google.protobuf'` — PROGRESS r5), so the API is
-    gated exactly like the real-Delta branch in operators/upsert.py."""
+    gated on the package being importable."""
     try:
         import google.protobuf  # noqa: F401
 

@@ -67,12 +67,6 @@ def _normalize_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
 ) -> None:

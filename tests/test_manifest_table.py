@@ -1,8 +1,8 @@
 """ManifestVersionedTable: versions share files; merge/delete rewrite
-only affected buckets. Differential-tested against the snapshot façade
-(ParquetVersionedTable) on identical inputs — same semantics, different
-commit cost — plus explicit file-reuse and vacuum reference-count
-assertions (the O(changed-buckets) claim, pinned)."""
+only affected buckets. Differential-tested against the plain-Python
+model in tests/table_model.py on identical inputs, plus explicit
+file-reuse and vacuum reference-count assertions (the
+O(changed-buckets) claim, pinned)."""
 
 from __future__ import annotations
 
@@ -11,10 +11,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pucminas_data_pipelines_spark.operators.upsert import (
-    ManifestVersionedTable,
-    ParquetVersionedTable,
-)
+from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
+from tests.table_model import canon, model_diff, model_merge
 
 
 def _rows(spark, data):
@@ -37,19 +35,16 @@ UPDATES = [
 
 
 def _sorted(df):
-    return sorted(map(tuple, df.collect()), key=lambda t: (t[0] is None, t[0]))
+    return canon(df.collect())
 
 
-def test_merge_matches_snapshot_facade(spark, tmp_path):
+def test_merge_matches_model(spark, tmp_path):
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=8)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
     m.overwrite(_rows(spark, BASE))
-    p.overwrite(_rows(spark, BASE))
     m.merge(_rows(spark, UPDATES))
-    p.merge(_rows(spark, UPDATES), key="id")
-    assert _sorted(m.read()) == _sorted(p.read())
+    assert _sorted(m.read()) == canon(model_merge(BASE, UPDATES))
     # time travel to the pre-merge version still serves the base rows
-    assert _sorted(m.read(version_as_of=0)) == _sorted(p.read(version_as_of=0))
+    assert _sorted(m.read(version_as_of=0)) == canon(BASE)
 
 
 def test_merge_shares_untouched_bucket_files(spark, tmp_path):
@@ -65,14 +60,11 @@ def test_merge_shares_untouched_bucket_files(spark, tmp_path):
         assert after[b] == before[b]
 
 
-def test_delete_where_matches_facade_and_shares_files(spark, tmp_path):
+def test_delete_where_matches_model_and_shares_files(spark, tmp_path):
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=8)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
     m.overwrite(_rows(spark, BASE))
-    p.overwrite(_rows(spark, BASE))
     m.delete_where(F.col("score") >= 50.0)
-    p.delete_where(F.col("score") >= 50.0)
-    assert _sorted(m.read()) == _sorted(p.read())
+    assert _sorted(m.read()) == canon(r for r in BASE if not r[2] >= 50.0)
     before = dict(m._manifest(0)["buckets"])
     after = dict(m._manifest(1)["buckets"])
     untouched = {b for b in after if before.get(b) == after[b]}
@@ -144,19 +136,16 @@ def test_generate_manifest_lists_latest_files(spark, tmp_path):
 
 
 def test_version_diff_cdc_works_on_manifest_table(spark, tmp_path):
-    """version_diff is table-agnostic (anything with .read(version)): the
-    manifest table must produce the same CDC rows as the facade."""
+    """version_diff over a merge (bucket-grain fast path) must emit
+    exactly the model's CDC rows: update pre/post pairs, inserts —
+    including the NULL-key insert — and nothing for unchanged rows."""
     from pucminas_data_pipelines_spark.operators.upsert import version_diff
 
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=8)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
-    for t in (m, p):
-        t.overwrite(_rows(spark, BASE))
+    m.overwrite(_rows(spark, BASE))
     m.merge(_rows(spark, UPDATES))
-    p.merge(_rows(spark, UPDATES), key="id")
     got_m = _sorted(version_diff(m, "id", 0, 1))
-    got_p = _sorted(version_diff(p, "id", 0, 1))
-    assert got_m == got_p
+    assert got_m == canon(model_diff(BASE, model_merge(BASE, UPDATES)))
     kinds = {t[-1] for t in got_m}
     assert kinds == {"insert", "update_preimage", "update_postimage"}
 
@@ -268,14 +257,11 @@ def test_delete_where_keeps_null_condition_rows(spark, tmp_path):
     plain ~condition dropped it from rewritten buckets only)."""
     data = [(1, "ana", 10.0), (2, "bia", None), (3, "caio", 90.0)]
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=1)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
     m.overwrite(_rows(spark, data))
-    p.overwrite(_rows(spark, data))
     m.delete_where(F.col("score") >= 50.0)
-    p.delete_where(F.col("score") >= 50.0)
     survivors = {r["id"] for r in m.read().collect()}
     assert survivors == {1, 2}, "NULL-score row must survive the delete"
-    assert _sorted(m.read()) == _sorted(p.read())
+    assert _sorted(m.read()) == canon(data[:2])
 
 
 def test_vacuum_safe_across_path_spellings(spark, tmp_path, monkeypatch):
@@ -302,13 +288,10 @@ def test_vacuum_safe_across_path_spellings(spark, tmp_path, monkeypatch):
 
 def test_vacuum_refuses_to_expire_the_live_snapshot(spark, tmp_path):
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=4)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
     m.overwrite(_rows(spark, BASE))
-    p.overwrite(_rows(spark, BASE))
-    for t in (m, p):
-        with pytest.raises(ValueError, match="retain_last"):
-            t.vacuum(retain_last=0)
-        assert len(t.read().collect()) == len(BASE)  # table untouched
+    with pytest.raises(ValueError, match="retain_last"):
+        m.vacuum(retain_last=0)
+    assert len(m.read().collect()) == len(BASE)  # table untouched
 
 
 def test_append_and_merge_enforce_column_types(spark, tmp_path):
@@ -340,10 +323,9 @@ def test_reserved_sentinel_column_refused(spark, tmp_path):
     t = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=4)
     with pytest.raises(ValueError, match="_s_present"):
         t.overwrite(flagged)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
-    p.overwrite(flagged)  # snapshot facade stores anything...
+    t.overwrite(_rows(spark, BASE))
     with pytest.raises(ValueError, match="_s_present"):
-        p.merge(flagged, key="id")  # ...but merge refuses the collision
+        t.merge(flagged)  # a merge source cannot smuggle the sentinel in
 
 
 def test_manifest_records_footer_stats_and_carries_them(spark, tmp_path):
@@ -635,18 +617,13 @@ def test_merge_rejects_ambiguous_source(spark, tmp_path):
     instead of silently fanning each matched target row out; duplicate
     NULL keys stay legal (they never match — each inserts as-is)."""
     m = ManifestVersionedTable(spark, str(tmp_path / "m"), key="id", n_buckets=2)
-    p = ParquetVersionedTable(spark, str(tmp_path / "p"))
     m.overwrite(_rows(spark, BASE))
-    p.overwrite(_rows(spark, BASE))
     dup = _rows(spark, [(1, "x", 9.0), (1, "y", 8.0)])
     with pytest.raises(ValueError, match="ambiguous"):
         m.merge(dup)
-    with pytest.raises(ValueError, match="ambiguous"):
-        p.merge(dup, key="id")
-    nulls = _rows(spark, [(None, "n1", 1.0), (None, "n2", 2.0)])
-    m.merge(nulls)
-    p.merge(nulls, key="id")
-    assert _sorted(m.read()) == _sorted(p.read())
+    nulls = [(None, "n1", 1.0), (None, "n2", 2.0)]
+    m.merge(_rows(spark, nulls))
+    assert _sorted(m.read()) == canon(model_merge(BASE, nulls))
     assert len(m.read().collect()) == len(BASE) + 2
 
 
@@ -939,7 +916,7 @@ def test_generated_column_computed_validated_and_enforced(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="generated column 'score_band'"):
         t.append(wrong)
-    # merge source without the column: computed, matches facade semantics
+    # merge source without the column: computed, then merged as usual
     t.merge(_rows(spark, [(1, "ana2", 95.0)]))
     row = t.read().where(F.col("id") == 1).collect()[0]
     assert (row["name"], row["score_band"]) == ("ana2", 4)

@@ -95,16 +95,7 @@ def test_grouped_range_ntile_matches_per_group_global_window(spark, skewed, k):
     }
     pid = None
     for g in ("a", "b", "c"):
-        bs = sorted({float(x) for x in bounds[g] if x == x})
-        expr = (
-            F.size(
-                F.filter(
-                    F.array(*[F.lit(b) for b in bs]), lambda b: b < F.col("_v")
-                )
-            )
-            if bs
-            else F.lit(0)
-        )
+        expr = ORD.bucket_expr(bounds[g], F.col("_v"))
         pid = (
             F.when(F.col("_g") == g, expr)
             if pid is None
@@ -125,6 +116,20 @@ def test_grouped_range_ntile_matches_per_group_global_window(spark, skewed, k):
     assert sorted((r._g, r.id, r.tile) for r in got) == sorted(
         (r._g, r.id, r.tile) for r in want
     )
+
+
+def test_grouped_range_ntile_refuses_null_bucket_id(spark):
+    """A NULL caller-supplied bucket id cannot join its bucket's bases:
+    the row must fail the query, not come back with a NULL tile."""
+    from pyspark.errors import PySparkException
+
+    df = spark.createDataFrame(
+        [("a", 1.0, 1, 0), ("a", 2.0, 2, None), ("a", 3.0, 3, 1)],
+        "_g string, _v double, id bigint, _rb int",
+    )
+    out = ORD.grouped_range_ntile(df, "_g", ["_v", "id"], 2, out="tile")
+    with pytest.raises(PySparkException, match="NULL bucket id"):
+        out.collect()
 
 
 def test_range_lead_matches_global_window(spark, skewed):

@@ -6,8 +6,6 @@ deadlines (JVM warmup skews the first example)."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -16,7 +14,8 @@ from pyspark.sql import functions as F
 from pucminas_data_pipelines_spark.operators import dedup as D
 from pucminas_data_pipelines_spark.operators.sampling import hash_bucket
 from pucminas_data_pipelines_spark.operators.skew import salted_inner_join
-from pucminas_data_pipelines_spark.operators.upsert import ParquetVersionedTable
+from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
+from tests.table_model import canon, model_merge
 
 _SETTINGS = settings(
     max_examples=8,
@@ -95,16 +94,13 @@ def test_salted_join_equivalence(spark, left_rows, right_rows, factor):
     st.dictionaries(st.integers(0, 20), st.integers(0, 99), min_size=1, max_size=10),
     st.dictionaries(st.integers(0, 20), st.integers(100, 199), min_size=1, max_size=10),
 )
-def test_merge_upsert_semantics(spark, base, updates):
-    """ParquetVersionedTable.merge == dict-update semantics on any key sets;
-    time travel v0 == the original base."""
-    path = "/root/repo/.tmp/prop_merge"
-    shutil.rmtree(path, ignore_errors=True)
-    t = ParquetVersionedTable(spark, path)
+def test_merge_upsert_semantics(spark, tmp_path_factory, base, updates):
+    """A whole-table (one-bucket) merge == dict-update semantics on any
+    key sets; time travel v0 == the original base."""
+    path = str(tmp_path_factory.mktemp("prop_merge") / "t")
+    t = ManifestVersionedTable(spark, path, key="k", n_buckets=1)
     t.overwrite(spark.createDataFrame(sorted(base.items()), "k int, v int"))
-    t.merge(
-        spark.createDataFrame(sorted(updates.items()), "k int, v int"), key="k"
-    )
+    t.merge(spark.createDataFrame(sorted(updates.items()), "k int, v int"))
     expected = dict(base)
     expected.update(updates)
     got = {r["k"]: r["v"] for r in t.read().collect()}
@@ -817,39 +813,24 @@ def test_weighted_exact_k_selects_only_valid_weights(spark, weights, k):
     ),
     st.integers(1, 9),
 )
-def test_manifest_merge_matches_snapshot_facade(spark, base, updates, n_buckets):
-    """ManifestVersionedTable.merge (bucket-pruned rewrite) must equal
-    ParquetVersionedTable.merge (full-snapshot rewrite) on arbitrary key
-    sets — NULL keys and NULL values included — for any bucket count,
-    and time travel to v0 must serve the base on both."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
+def test_manifest_merge_matches_model(
+    spark, tmp_path_factory, base, updates, n_buckets
+):
+    """ManifestVersionedTable.merge (bucket-pruned rewrite) must equal the
+    plain-Python MERGE model on arbitrary key sets — NULL keys and NULL
+    values included — for any bucket count, and time travel to v0 must
+    serve the base."""
+    base_rows, update_rows = list(base.items()), list(updates.items())
 
-    def _df(d):
-        return spark.createDataFrame(
-            sorted(d.items(), key=lambda kv: (kv[0] is None, kv[0])),
-            "k int, v int",
-        )
+    def _df(rows):
+        return spark.createDataFrame(canon(rows), "k int, v int")
 
-    def _rows(df):
-        return sorted(
-            ((r["k"], r["v"]) for r in df.collect()),
-            key=lambda t: (t[0] is None, t[0], t[1] is None, t[1]),
-        )
-
-    mp = "/root/repo/.tmp/prop_mvt"
-    pp = "/root/repo/.tmp/prop_mvt_facade"
-    shutil.rmtree(mp, ignore_errors=True)
-    shutil.rmtree(pp, ignore_errors=True)
-    m = ManifestVersionedTable(spark, mp, key="k", n_buckets=n_buckets)
-    p = ParquetVersionedTable(spark, pp)
-    m.overwrite(_df(base))
-    p.overwrite(_df(base))
-    m.merge(_df(updates))
-    p.merge(_df(updates), key="k")
-    assert _rows(m.read()) == _rows(p.read())
-    assert _rows(m.read(version_as_of=0)) == _rows(p.read(version_as_of=0))
+    path = str(tmp_path_factory.mktemp("prop_mvt") / "t")
+    m = ManifestVersionedTable(spark, path, key="k", n_buckets=n_buckets)
+    m.overwrite(_df(base_rows))
+    m.merge(_df(update_rows))
+    assert canon(m.read().collect()) == canon(model_merge(base_rows, update_rows))
+    assert canon(m.read(version_as_of=0).collect()) == canon(base_rows)
 
 
 # -- ManifestVersionedTable: model-based op-sequence property -------------
@@ -880,21 +861,6 @@ _mvt_op = st.one_of(
 )
 
 
-def _mvt_model_merge(rows, src):
-    """Reference semantics of MERGE on a multiset with possible duplicate
-    keys (appends create them): every target row whose key matches a
-    source row is replaced by that source row; unmatched source rows are
-    inserted once; NULL-key source rows never match and insert as-is."""
-    by_key = {}
-    for r in src:
-        if r[0] is not None:
-            by_key[r[0]] = r
-    out = [by_key.get(r[0], r) if r[0] is not None else r for r in rows]
-    matched = {r[0] for r in rows if r[0] is not None}
-    out += [r for r in src if r[0] is None or r[0] not in matched]
-    return out
-
-
 @settings(
     max_examples=5,
     deadline=None,
@@ -915,10 +881,6 @@ def test_manifest_table_op_sequences_match_model(
     by append, NULL merge keys inserted as-is, NULL-score rows surviving
     score-threshold deletes, DV and CoW deletes agreeing, optimize
     preserving content, and restore reproducing any committed version."""
-    from pucminas_data_pipelines_spark.operators.upsert import (
-        ManifestVersionedTable,
-    )
-
     path = str(tmp_path_factory.mktemp("mvt_model") / "t")
     t = ManifestVersionedTable(spark, path, key="id", n_buckets=n_buckets)
 
@@ -941,7 +903,7 @@ def test_manifest_table_op_sequences_match_model(
             snapshots.append(state + list(arg))
         elif op == "merge":
             t.merge(df(arg))
-            snapshots.append(_mvt_model_merge(state, arg))
+            snapshots.append(model_merge(state, arg))
         elif op in ("delete_cow", "delete_dv"):
             mode = "copy_on_write" if op == "delete_cow" else "merge_on_read"
             t.delete_where(F.col("score") >= arg, mode=mode)

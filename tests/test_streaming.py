@@ -162,18 +162,19 @@ def test_foreachbatch_upsert_live_is_incremental(spark):
     """The registered foreachBatch query must build the table by REAL
     incremental merges: 4 single-file micro-batches → version history
     v0 (overwrite) + 3 merge commits."""
-    from pucminas_data_pipelines_spark.operators.upsert import ParquetVersionedTable
+    from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
 
     QUERIES["streaming_foreachbatch_upsert_live"](spark, SF_SMOKE).collect()
-    table = ParquetVersionedTable(spark, "/root/repo/.tmp/stream_upsert_live/table")
+    table = ManifestVersionedTable(
+        spark, "/root/repo/.tmp/stream_upsert_live/table", key="user_id"
+    )
     assert table.history() == [0, 1, 2, 3]
 
 
 def test_transform_with_state_running_stats(spark):
     """transformWithStateInPandas (arbitrary-state v2): per-user count+max
     must equal the batch aggregate (both order-independent). Skips where
-    the container lacks the protobuf package TWS's state protocol needs —
-    same environmental gate as the real-Delta branch."""
+    the protobuf package TWS's state protocol needs is not installed."""
     import pytest
 
     from pucminas_data_pipelines_spark.streaming import jobs

@@ -1,11 +1,10 @@
-"""Mutation-layer tests: the Parquet versioned table must reproduce the
+"""Mutation-layer tests: the versioned table must reproduce the
 reference's Delta scenario semantics (sparkcode/titanic_example_delta.py:
 25-72): overwrite → merge upsert → time travel → manifest, plus delete."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,16 +15,14 @@ from pucminas_data_pipelines_spark.fixtures import (
     TITANIC_NEW_ROWS,
 )
 from pucminas_data_pipelines_spark.io import from_rows
-from pucminas_data_pipelines_spark.operators.upsert import ParquetVersionedTable
-
-PATH = "/root/repo/.tmp/test_upsert"
+from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
 
 
 @pytest.fixture()
-def table(spark):
-    shutil.rmtree(PATH, ignore_errors=True)
-    yield ParquetVersionedTable(spark, PATH)
-    shutil.rmtree(PATH, ignore_errors=True)
+def table(spark, tmp_path):
+    return ManifestVersionedTable(
+        spark, str(tmp_path / "t"), key="PassengerId", n_buckets=4
+    )
 
 
 def _scenario(spark, table):
@@ -85,7 +82,9 @@ def test_manifest_generation(spark, table):
     assert os.path.exists(manifest)
     files = open(manifest).read().strip().splitlines()
     assert files and all(f.endswith(".parquet") for f in files)
-    assert all(f"v={table.latest_version()}" in f for f in files)
+    latest = table._manifest(table.latest_version())
+    latest_dirs = {table._abs(d) for d in table._all_dirs(latest)}
+    assert {os.path.dirname(f) for f in files} == latest_dirs
 
 
 def test_merge_null_key_source_row_inserted(spark, table):
@@ -141,42 +140,6 @@ def test_version_diff_delete(spark, table):
     table.delete_where(F.col("PassengerId") == 6)
     out = version_diff(table, "PassengerId", 1, 2).collect()
     assert [(r["PassengerId"], r["_change_type"]) for r in out] == [(6, "delete")]
-
-
-@pytest.mark.skipif(
-    not __import__(
-        "pucminas_data_pipelines_spark.session", fromlist=["delta_available"]
-    ).delta_available(),
-    reason=(
-        "delta-spark not installed in this container and package installs "
-        "are prohibited by the build environment (recorded constraint; the "
-        "DeltaVersionedTable branch runs when the sandbox ever ships it)"
-    ),
-)
-def test_delta_branch_reference_scenario(spark):
-    """Real-Delta delegation: the reference's exact scenario
-    (titanic_example_delta.py:25-72) through DeltaVersionedTable."""
-    from pucminas_data_pipelines_spark.operators.upsert import DeltaVersionedTable
-
-    path = "/root/repo/.tmp/test_delta_upsert"
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        t = DeltaVersionedTable(spark, path)
-        base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
-        assert t.overwrite(base) == 0
-        changed = base.where(F.col("PassengerId").isin(1, 5)).withColumn(
-            "Survived", F.lit(1)
-        )
-        newrows = from_rows(spark, TITANIC_NEW_ROWS, TITANIC_DDL)
-        assert t.merge(changed.union(newrows), key="PassengerId") == 1
-        rows = {r["PassengerId"]: r for r in t.read().collect()}
-        assert set(rows) == {1, 2, 3, 4, 5, 6, 892, 893}
-        assert rows[1]["Survived"] == 1
-        v0 = {r["PassengerId"]: r for r in t.read(version_as_of=0).collect()}
-        assert set(v0) == {1, 2, 3, 4, 5, 6} and v0[1]["Survived"] == 0
-        assert os.path.isdir(t.generate_manifest())
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 def test_scd2_apply_four_cases_and_single_pass_plan(spark):
