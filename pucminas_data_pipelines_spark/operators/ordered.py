@@ -242,8 +242,9 @@ def range_ntile(
     rows), NOT a separate ``df.agg(count)`` — that leg was a third full
     pass over the input in the physical plan (the bases subtree and the
     main scan being the other two), pure waste at any scale."""
-    df = df.localCheckpoint(eager=True) if materialize else df
-    b = with_range_buckets(df, key_col, n_buckets, boundaries=boundaries)
+    b = with_range_buckets(
+        df, key_col, n_buckets, boundaries=boundaries, materialize=materialize
+    )
     return grouped_range_ntile(
         b.withColumn("_ntile_g", F.lit(0)), "_ntile_g", order_cols, k, out=out
     ).drop("_ntile_g")
