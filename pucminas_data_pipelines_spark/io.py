@@ -3,7 +3,7 @@
 The reference reads schema'd CSV (`sparkcode/titanic_example_delta.py:19-22`),
 creates DataFrames from local rows (`:30-34`) and writes a table (`:25`).
 We expose the same surface behind one façade over CSV/Parquet/JSON/ORC
-(driver testdata is Parquet). The reference's Delta reads and writes —
+(the test data is Parquet). The reference's Delta reads and writes —
 overwrite, MERGE, time travel — live on the versioned table,
 ``operators/upsert.ManifestVersionedTable``.
 

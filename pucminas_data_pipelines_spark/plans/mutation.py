@@ -31,6 +31,13 @@ from pucminas_data_pipelines_spark.operators.upsert import (
 from pucminas_data_pipelines_spark.plans.registry import query
 from pucminas_data_pipelines_spark.tables import load_table
 
+# The versioned tables these queries write live under ``.tmp/`` at the
+# repository root (git-ignored).
+_TMP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".tmp",
+)
+
 _LOWER_COLS = [
     "passengerid", "survived", "pclass", "name", "sex", "age",
     "sibsp", "parch", "ticket", "fare", "cabin", "embarked",
@@ -92,7 +99,7 @@ def mutation_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-MERGE table state (reference O11 semantics:
     whenMatchedUpdateAll + whenNotMatchedInsertAll)."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_merge", n_buckets=1
+        spark, f"{_TMP}/titanic_merge", n_buckets=1
     )
     return _lowered(table.read())
 
@@ -105,7 +112,7 @@ def mutation_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """versionAsOf=0 read after the merge (reference O15): the pre-merge
     snapshot must be intact."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_timetravel", n_buckets=1
+        spark, f"{_TMP}/titanic_timetravel", n_buckets=1
     )
     return _lowered(table.read(version_as_of=0))
 
@@ -157,7 +164,7 @@ def mutation_cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes in one pass, unchanged rows silent. Delta surface this maps
     to: ``table_changes`` with readChangeFeed."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_cdc", n_buckets=1
+        spark, f"{_TMP}/titanic_cdc", n_buckets=1
     )
     table.delete_where(F.col("Survived") == 0)  # → version 2
     diff = version_diff(table, key="PassengerId", from_version=0, to_version=2)
@@ -180,7 +187,7 @@ def mutation_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE WHERE survived = 0 on top of the merged state (the Delta
     delete clause family)."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_delete", n_buckets=1
+        spark, f"{_TMP}/titanic_delete", n_buckets=1
     )
     table.delete_where(F.col("Survived") == 0)
     return _lowered(table.read())
@@ -208,7 +215,7 @@ def mutation_manifest_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted as one summary row (counts + invariants) so the oracle is a
     literal VALUES check; the raw manifest paths contain nondeterministic
     part-file UUIDs and are asserted structurally instead."""
-    path = "/root/repo/.tmp/titanic_manifest"
+    path = f"{_TMP}/titanic_manifest"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=1)
@@ -328,7 +335,7 @@ def mutation_overwrite_dynamic_partitions(spark: SparkSession, sf_dir: str) -> D
     registry invariant)."""
     from contextlib import contextmanager
 
-    path = "/root/repo/.tmp/orders_dynpart"
+    path = f"{_TMP}/orders_dynpart"
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
@@ -477,7 +484,7 @@ def mutation_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note in operators/upsert.vacuum: retention bounds storage on a
     frequently-merged 100 TB table; the tradeoff is the time-travel
     horizon consumers keep."""
-    path = "/root/repo/.tmp/expiry_table"
+    path = f"{_TMP}/expiry_table"
     shutil.rmtree(path, ignore_errors=True)
     t = ManifestVersionedTable(spark, path, key="n_nationkey")
     base = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -534,7 +541,7 @@ def mutation_manifest_merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
     touches and points every other bucket at version 0's files — the
     Delta add/remove-files idea that makes a small merge O(|source| +
     affected-bucket bytes) instead of O(table) at 100 TB."""
-    table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_merge")
+    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_merge")
     return _lowered(table.read())
 
 
@@ -555,7 +562,7 @@ def mutation_manifest_delete_null_predicate(
     Pins the null-safe keep-filter (NOT (cond <=> TRUE)) at driver level
     — the bucket-hash-dependent data-loss shape a plain ~cond had."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_delnull", n_buckets=1
+        spark, f"{_TMP}/titanic_mvt_delnull", n_buckets=1
     )
     table.delete_where(F.col("Age") < 35.0)
     return _lowered(table.read())
@@ -577,7 +584,7 @@ def mutation_manifest_append_pointread(
     rewritten), then read_keys([1, 892, 9999]) scans ONLY the buckets
     those keys hash into — manifest-level data skipping; the missing key
     simply matches nothing. Expected: base row 1 and appended row 892."""
-    path = "/root/repo/.tmp/titanic_mvt_append"
+    path = f"{_TMP}/titanic_mvt_append"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=8)
@@ -608,7 +615,7 @@ def mutation_manifest_optimize_roundtrip(
     returns the post-optimize state — byte-identical semantics to the
     pre-optimize version — while older versions keep time-traveling
     (pinned in tests/test_manifest_table.py)."""
-    table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_opt")
+    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_opt")
     bump = table.read().withColumn(
         "Fare",
         (F.col("Fare").cast("decimal(12,4)") + F.lit(1.0).cast("decimal(2,1)"))
@@ -637,7 +644,7 @@ def mutation_manifest_vacuum_lifecycle(
     directories no surviving manifest references are removed, so v1/v2
     stay fully readable through their shared files (Delta's
     log-then-vacuum contract)."""
-    table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_vac")
+    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_vac")
     bump = from_rows(
         spark,
         [(2, 1, 1, "Cumings, Mrs. John Bradley", "female", 38.0, 1, 0,
@@ -690,7 +697,7 @@ def mutation_manifest_timerange_scan(spark: SparkSession, sf_dir: str) -> DataFr
     interior range) is pinned in tests/test_manifest_table.py."""
     import datetime as _dt
 
-    path = "/root/repo/.tmp/events_mvt_range"
+    path = f"{_TMP}/events_mvt_range"
     shutil.rmtree(path, ignore_errors=True)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -738,7 +745,7 @@ def mutation_manifest_deletion_vectors(
     — the right trade for point deletes (GDPR erasure) scattered across
     a 100 TB table; the read-side anti-join broadcasts the match-sized
     DV, never shuffling the table."""
-    table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_dv")
+    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_dv")
     table.delete_where(F.col("Survived") == 0, mode="merge_on_read")
     return _lowered(table.read())
 
@@ -784,7 +791,7 @@ def mutation_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_rollup_delta,
         rollup_from_scratch,
     )
-    path = "/root/repo/.tmp/customer_mvt_rollup"
+    path = f"{_TMP}/customer_mvt_rollup"
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -857,7 +864,7 @@ def mutation_incremental_rollup_minmax(
         apply_rollup_minmax_delta,
         rollup_minmax_from_scratch,
     )
-    path = "/root/repo/.tmp/customer_mvt_minmax"
+    path = f"{_TMP}/customer_mvt_minmax"
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -946,7 +953,7 @@ def mutation_manifest_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     ~O(sqrt-of-selectivity) of the files per dimension instead of all
     of them; pruning happens at PLAN time from manifest stats — zero
     data reads for skipped files."""
-    path = "/root/repo/.tmp/orders_mvt_zorder"
+    path = f"{_TMP}/orders_mvt_zorder"
     shutil.rmtree(path, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1000,7 +1007,7 @@ def mutation_manifest_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame
     Delta's column-mapping ids exist for) are pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_dropcol"
+        spark, f"{_TMP}/titanic_mvt_dropcol"
     )
     for col in [
         "Pclass", "Name", "Sex", "Age", "SibSp",
@@ -1027,7 +1034,7 @@ def mutation_manifest_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation-time bucket count makes every merge rewrite 1/16th of the
     table forever."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_rebucket"
+        spark, f"{_TMP}/titanic_mvt_rebucket"
     )
     v = table.rebucket(16)
     m = table._manifest(v)
@@ -1059,7 +1066,7 @@ def mutation_manifest_rebucket_incremental(
     appends and rewrite refusals are pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_rebucket_inc"
+        spark, f"{_TMP}/titanic_mvt_rebucket_inc"
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1100,7 +1107,7 @@ def mutation_manifest_rebucket_shrink(
     escape for an over-bucketed table (created for a projected size
     that never came) whose tiny buckets tax every scan's planning."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_rebucket_shrink", n_buckets=16
+        spark, f"{_TMP}/titanic_mvt_rebucket_shrink", n_buckets=16
     )
     before = set(
         ManifestVersionedTable._all_dirs(table._manifest(table.latest_version()))
@@ -1153,7 +1160,7 @@ def mutation_manifest_rebucket_concurrent_merge(
     left in the commit layer. The OCC storm interleaving splits and
     merges is pinned in tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_rebucket_midmig"
+        spark, f"{_TMP}/titanic_mvt_rebucket_midmig"
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1207,7 +1214,7 @@ def mutation_manifest_dv_delete_during_rebucket(
     unrelated splits rebase; concurrent DV/split storm) is pinned in
     tests/test_rebucket_dv.py."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_rebucket_dv"
+        spark, f"{_TMP}/titanic_mvt_rebucket_dv"
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1258,19 +1265,19 @@ def streaming_manifest_cdf_replay(
     )
 
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_cdf_replay"
+        spark, f"{_TMP}/titanic_mvt_cdf_replay"
     )
     try:
         spark.dataSource.register(ManifestCDFDataSource)
     except Exception:
         pass
-    out_dir = "/root/repo/.tmp/titanic_mvt_cdf_replay_out"
-    ckpt = "/root/repo/.tmp/titanic_mvt_cdf_replay_ckpt"
+    out_dir = f"{_TMP}/titanic_mvt_cdf_replay_out"
+    ckpt = f"{_TMP}/titanic_mvt_cdf_replay_ckpt"
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     q = (
         spark.readStream.format("manifest_cdf")
-        .option("path", "/root/repo/.tmp/titanic_mvt_cdf_replay")
+        .option("path", f"{_TMP}/titanic_mvt_cdf_replay")
         .option("startingVersion", -1)
         .load()
         .writeStream.format("parquet")
@@ -1326,7 +1333,7 @@ def mutation_manifest_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame
     whole. The rebase-over-concurrent-append behavior is pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_autocompact"
+        spark, f"{_TMP}/titanic_mvt_autocompact"
     )
     for row in _AUTOCOMPACT_APPENDS:
         table.append(from_rows(spark, [row], TITANIC_DDL))
@@ -1375,7 +1382,7 @@ def mutation_manifest_concurrent_writers(
     the streaming-ingest + maintenance-job topology every lakehouse
     runs; the full rebase-vs-refuse matrix is pinned in
     tests/test_occ_resolution.py."""
-    path = "/root/repo/.tmp/titanic_mvt_occ"
+    path = f"{_TMP}/titanic_mvt_occ"
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=4)
@@ -1408,7 +1415,7 @@ def mutation_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     table reads exactly as it did before any mutation; the oracle is the
     base fixture verbatim. Operation log + shared-files invariants are
     pinned in tests/test_manifest_table.py."""
-    table = _run_manifest_scenario(spark, "/root/repo/.tmp/titanic_mvt_restore")
+    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_restore")
     table.delete_where(F.col("Survived") == 0)
     table.restore(0)
     return _lowered(table.read())
@@ -1431,7 +1438,7 @@ def mutation_manifest_delta_export(spark: SparkSession, sf_dir: str) -> DataFram
     from pucminas_data_pipelines_spark.operators.deltalog import DeltaLogReader
 
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_export"
+        spark, f"{_TMP}/titanic_mvt_export"
     )
     table.export_delta_log()
     return _lowered(DeltaLogReader(spark, table.path).read())
@@ -1455,7 +1462,7 @@ def mutation_manifest_delta_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pucminas_data_pipelines_spark.operators.deltalog import DeltaLogReader
 
     table = _run_manifest_scenario(
-        spark, "/root/repo/.tmp/titanic_mvt_tail"
+        spark, f"{_TMP}/titanic_mvt_tail"
     )
     written = table.export_delta_log_tail()
     reader = DeltaLogReader(spark, table.path)
@@ -1509,8 +1516,8 @@ def mutation_manifest_shallow_clone(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    src_path = "/root/repo/.tmp/mvt_clone_src"
-    dst_path = "/root/repo/.tmp/mvt_clone_dst"
+    src_path = f"{_TMP}/mvt_clone_src"
+    dst_path = f"{_TMP}/mvt_clone_dst"
     for p in (src_path, dst_path):
         _sh.rmtree(p, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
@@ -1576,7 +1583,7 @@ def mutation_manifest_check_constraint(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = "/root/repo/.tmp/mvt_check_constraint"
+    path = f"{_TMP}/mvt_check_constraint"
     _sh.rmtree(path, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1641,7 +1648,7 @@ def mutation_manifest_generated_column(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = "/root/repo/.tmp/mvt_generated_col"
+    path = f"{_TMP}/mvt_generated_col"
     _sh.rmtree(path, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1702,7 +1709,7 @@ def mutation_tpch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = "/root/repo/.tmp/mvt_tpch_refresh"
+    path = f"{_TMP}/mvt_tpch_refresh"
     _sh.rmtree(path, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     table = ManifestVersionedTable(spark, path, key="o_orderkey", n_buckets=8)

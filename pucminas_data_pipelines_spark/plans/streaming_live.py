@@ -165,9 +165,10 @@ def streaming_foreachbatch_upsert_live(spark: SparkSession, sf_dir: str) -> Data
 
     from pyspark.sql import functions as F
 
+    from pucminas_data_pipelines_spark.plans.mutation import _TMP
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_upsert_live"
+    base = f"{_TMP}/stream_upsert_live"
     src, tbl = f"{base}/src", f"{base}/table"
     shutil.rmtree(base, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select("user_id", "value")

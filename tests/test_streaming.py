@@ -9,6 +9,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from pucminas_data_pipelines_spark.plans import QUERIES
+from pucminas_data_pipelines_spark.plans.mutation import _TMP
 from pucminas_data_pipelines_spark.streaming import jobs
 from tests.conftest import SF_SMOKE
 
@@ -40,7 +41,7 @@ def test_streaming_dedup_counts(spark):
 
 
 def test_foreachbatch_upsert_sink(spark):
-    path = "/root/repo/.tmp/test_stream_upsert"
+    path = f"{_TMP}/test_stream_upsert"
     shutil.rmtree(path, ignore_errors=True)
     try:
         events = jobs.read_events_stream(spark, SF_SMOKE).select(
@@ -166,7 +167,7 @@ def test_foreachbatch_upsert_live_is_incremental(spark):
 
     QUERIES["streaming_foreachbatch_upsert_live"](spark, SF_SMOKE).collect()
     table = ManifestVersionedTable(
-        spark, "/root/repo/.tmp/stream_upsert_live/table", key="user_id"
+        spark, f"{_TMP}/stream_upsert_live/table", key="user_id"
     )
     assert table.history() == [0, 1, 2, 3]
 
