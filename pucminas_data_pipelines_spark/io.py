@@ -14,10 +14,23 @@ and ``bucket_by`` so large fact tables can be laid out for co-located joins.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+# Scratch tables and checkpoints written by registry queries and tests live
+# under ``.tmp/`` at the root of the checkout this package runs from
+# (git-ignored), so two checkouts never write into each other's tables.
+_SCRATCH_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp"
+)
+
+
+def scratch_path(*parts: str) -> str:
+    """``<checkout>/.tmp/<parts...>``."""
+    return os.path.join(_SCRATCH_ROOT, *parts)
 
 
 def read_csv(

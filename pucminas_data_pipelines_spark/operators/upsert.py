@@ -25,6 +25,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pucminas_data_pipelines_spark.operators import manifest_log
+
+# the Delta-log exporters' resume state, next to the log entries
+_EXPORT_STATE = "_mvt_export_state"
+
 
 class ConcurrentWriteError(RuntimeError):
     """A concurrent writer committed the same table version first
@@ -48,40 +53,12 @@ def _parse_bytes(v: str, default: int) -> int:
         return default
 
 
-def _reject_ambiguous_merge_source(source: DataFrame, key: str) -> None:
-    """Delta's merge contract: a target row matched by MULTIPLE source
-    rows is an error, not a silent row multiplication (the full-outer
-    join would otherwise fan each matched target row out once per
-    duplicate source key). One aggregation on the dimension-sized
-    source; NULL keys never equi-match, so duplicates there are legal
-    (each inserts as-is)."""
-    dup = (
-        source.where(F.col(key).isNotNull())
-        .groupBy(key)
-        .count()
-        .where(F.col("count") > 1)
-        .limit(1)
-        .collect()
-    )
-    if dup:
-        raise ValueError(
-            f"merge source has {dup[0]['count']} rows for key "
-            f"{dup[0][0]!r}; Delta merge rejects ambiguous matches — "
-            "pre-aggregate the source to one row per key"
-        )
-
-
 class ManifestVersionedTable:
     """Versioned table where a version is a FILE LIST, not a snapshot
     copy — the Delta/Iceberg idea (reference O5/O10/O11/O15/O16,
     sparkcode/titanic_example_delta.py:25-72) implemented at hash-bucket
     granularity, so a commit costs O(changed buckets), not O(table).
-
-    Layout::
-
-        <path>/data/<commit-uuid>/mvt_bucket=<b>/part-*.parquet
-        <path>/_manifests/v=<N>.json   # bucket -> [data dirs], schema, key
-        <path>/_LATEST
+    The on-disk layout is operators/manifest_log.py's.
 
     Each bucket maps to a LIST of directories: ``append`` (the dominant
     ingestion commit) just writes its new files and extends the lists —
@@ -117,50 +94,18 @@ class ManifestVersionedTable:
         self.key = key
         self.n_buckets = n_buckets
 
-    # -- version bookkeeping -------------------------------------------
-    def _latest_file(self) -> str:
-        return os.path.join(self.path, "_LATEST")
-
+    # -- version bookkeeping (the log itself is operators/manifest_log.py)
     def _publish_latest(self, version: int) -> None:
-        """Atomically repoint _LATEST (temp file + os.replace): a plain
-        truncate-write leaves a window where a concurrent reader — the
-        stream sources poll _LATEST every trigger — sees an EMPTY file
-        and crashes on int('') (caught live by the r12 preflight racing
-        a micro-batch against a commit)."""
-        import uuid as _uuid
-
-        tmp = f"{self._latest_file()}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write(str(version))
-        os.replace(tmp, self._latest_file())
+        manifest_log.publish_latest(self.path, version)
 
     def latest_version(self) -> int:
-        try:
-            with open(self._latest_file()) as fh:
-                v = int(fh.read().strip())
-        except FileNotFoundError:
-            v = -1
-        # _LATEST is a HINT, not the commit (Delta's _last_checkpoint
-        # semantics): the atomic manifest link IS the commit. A writer
-        # killed between link and pointer replace leaves a durable commit
-        # the pointer misses — walk forward to self-heal (r13 crash-
-        # injection sweep; O(1) extra stat when the pointer is current).
-        # The next successful commit repairs the pointer itself.
-        while os.path.exists(self._manifest_path(v + 1)):
-            v += 1
-        return v
+        return manifest_log.latest_version(self.path)
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.path, "_manifests", f"v={version}.json")
+        return manifest_log.manifest_path(self.path, version)
 
     def _manifest(self, version: int) -> dict:
-        import json as _json
-
-        try:
-            with open(self._manifest_path(version)) as fh:
-                manifest = _json.load(fh)
-        except FileNotFoundError:
-            raise ValueError(f"version {version} does not exist") from None
+        manifest = manifest_log.read_manifest(self.path, version)
         # the on-disk layout wins over constructor defaults: a reopened
         # handle must bucket rows exactly as the data was written, or
         # merges would scan the wrong directories and silently duplicate
@@ -189,8 +134,8 @@ class ManifestVersionedTable:
         info = dict(manifest.get("commit_info", {}))
         info.setdefault("ts", _dt.datetime.now().astimezone().isoformat())
         manifest = dict(manifest, commit_info=info)
-        os.makedirs(os.path.join(self.path, "_manifests"), exist_ok=True)
         target = self._manifest_path(version)
+        os.makedirs(os.path.dirname(target), exist_ok=True)
         staged = f"{target}.tmp.{_uuid.uuid4().hex[:8]}"
         with open(staged, "w") as fh:
             _json.dump(manifest, fh)
@@ -328,12 +273,19 @@ class ManifestVersionedTable:
         for k, v in writer_opts.items():
             writer = writer.option(k, v)
         writer.partitionBy("mvt_bucket").parquet(commit_dir)
-        rel_commit = os.path.relpath(commit_dir, self.path)
-        out: dict[str, list[str]] = {}
-        for name in os.listdir(commit_dir):
-            if name.startswith("mvt_bucket="):
-                out[name.split("=", 1)[1]] = [os.path.join(rel_commit, name)]
-        return out
+        return self._written_buckets(commit_dir)
+
+    def _written_buckets(self, write_dir: str) -> dict[str, list[str]]:
+        """{bucket: [root-relative dir]} for the ``mvt_bucket=<b>`` dirs a
+        partitioned write left under ``write_dir`` (none if absent)."""
+        if not os.path.isdir(write_dir):
+            return {}
+        rel = os.path.relpath(write_dir, self.path)
+        return {
+            name.split("=", 1)[1]: [os.path.join(rel, name)]
+            for name in os.listdir(write_dir)
+            if name.startswith("mvt_bucket=")
+        }
 
     def _write_buckets_two_gen(
         self, df: DataFrame, next_ids: list[str], next_n: int
@@ -359,25 +311,13 @@ class ManifestVersionedTable:
             "mvt_bucket", F.when(is_next, nb).otherwise(self._bucket_expr())
         )
         out_df.write.partitionBy("mvt_gen", "mvt_bucket").parquet(commit_dir)
-        rel_commit = os.path.relpath(commit_dir, self.path)
-        written: dict[str, list[str]] = {}
-        written_next: dict[str, list[str]] = {}
-        for gen, out in (("cur", written), ("next", written_next)):
-            gdir = os.path.join(commit_dir, f"mvt_gen={gen}")
-            if not os.path.isdir(gdir):
-                continue
-            for name in os.listdir(gdir):
-                if name.startswith("mvt_bucket="):
-                    out[name.split("=", 1)[1]] = [
-                        os.path.join(rel_commit, f"mvt_gen={gen}", name)
-                    ]
-        return written, written_next
+        return (
+            self._written_buckets(os.path.join(commit_dir, "mvt_gen=cur")),
+            self._written_buckets(os.path.join(commit_dir, "mvt_gen=next")),
+        )
 
     def _abs(self, d: str) -> str:
-        """Resolve a manifest-recorded bucket dir against the table root
-        (manifests store root-relative paths; absolute entries from
-        pre-relative manifests still resolve as themselves)."""
-        return d if os.path.isabs(d) else os.path.join(self.path, d)
+        return manifest_log.resolve(self.path, d)
 
     @staticmethod
     def _align_columns(df: DataFrame, manifest: dict) -> DataFrame:
@@ -421,24 +361,8 @@ class ManifestVersionedTable:
             )
         return df if df.columns == cols else df.select(*cols)
 
-    @staticmethod
-    def _bucket_dirs(
-        buckets: dict[str, list[str]], subset: list[str] | None = None
-    ) -> list[str]:
-        keys = sorted(buckets) if subset is None else [
-            b for b in subset if b in buckets
-        ]
-        return [d for b in keys for d in buckets[b]]
-
-    @classmethod
-    def _all_dirs(cls, manifest: dict) -> list[str]:
-        """Every data dir a manifest references: the current-generation
-        bucket map plus, mid-rebucket, the already-migrated target-
-        generation map (``buckets_next``). Full scans and reference
-        counting must use THIS, not ``buckets`` alone."""
-        return cls._bucket_dirs(manifest["buckets"]) + cls._bucket_dirs(
-            manifest.get("buckets_next", {})
-        )
+    _bucket_dirs = staticmethod(manifest_log.bucket_dirs)
+    _all_dirs = staticmethod(manifest_log.data_dirs)
 
     def _refuse_mid_rebucket(self, manifest: dict, what: str) -> None:
         """The few operations still undefined while an incremental
@@ -566,9 +490,7 @@ class ManifestVersionedTable:
 
         d = self._abs(rel_dir)
         per_file: dict[str, dict[str, list]] = {}
-        for fname in sorted(os.listdir(d)):
-            if not fname.endswith(".parquet"):
-                continue
+        for fname in manifest_log.parquet_files(d):
             lo: dict[str, object] = {}
             hi: dict[str, object] = {}
             bad: set[str] = set()
@@ -629,13 +551,9 @@ class ManifestVersionedTable:
 
         rows = 0
         nbytes = 0
-        for d in self._all_dirs(manifest):
-            ad = self._abs(d)
-            for fname in os.listdir(ad):
-                if fname.endswith(".parquet"):
-                    fp = os.path.join(ad, fname)
-                    rows += pq.ParquetFile(fp).metadata.num_rows
-                    nbytes += os.path.getsize(fp)
+        for fp in manifest_log.data_files(self.path, manifest):
+            rows += pq.ParquetFile(fp).metadata.num_rows
+            nbytes += os.path.getsize(fp)
         return rows, nbytes
 
     def _commit_with_stats(
@@ -1320,24 +1238,20 @@ class ManifestVersionedTable:
         df = self._apply_generated(df, manifest, "append source")
         df = self._align_columns(df, manifest)
         self._enforce_constraints(df, manifest, "append source")
-        return {
-            "kind": "append",
-            "operation": "APPEND",
-            "base_version": version,
-            "base_n_buckets": manifest["n_buckets"],
+        return self._staged(
+            "append",
+            "APPEND",
+            version,
+            manifest,
             # compat checks compare winners against the PRE-evolution
             # schema (they committed against it); apply carries the
             # evolved layout
-            "base_columns": base_columns,
-            "base_schema": base_schema,
-            "out_columns": manifest["columns"],
-            "out_schema": manifest["schema"],
-            "base_constraints": manifest.get("constraints", {}),
-            "base_generated": manifest.get("generated", {}),
-            "written": self._write_buckets(df),
-            "txn_app": txn_app,
-            "txn_version": txn_version,
-        }
+            base_columns=base_columns,
+            base_schema=base_schema,
+            written=self._write_buckets(df),
+            txn_app=txn_app,
+            txn_version=txn_version,
+        )
 
     def last_txn_version(self, txn_app: str) -> int | None:
         """Highest txn_version committed for an app (None if never) — the
@@ -1520,26 +1434,20 @@ class ManifestVersionedTable:
             )
         else:
             written, written_next = self._write_buckets(merged), {}
-        return {
-            "kind": "rewrite",
-            "operation": "MERGE",
-            "base_version": version,
-            "base_n_buckets": manifest["n_buckets"],
-            "base_columns": base_columns,
-            "base_schema": base_schema,
-            "out_columns": cols,
-            "out_schema": manifest["schema"],
-            "base_constraints": manifest.get("constraints", {}),
-            "base_generated": manifest.get("generated", {}),
-            "base_dvs": list(manifest.get("deletion_vectors", [])),
-            "base_rebucket_target": in_flight,
-            "affected": affected,
-            "affected_next": affected_next,
-            "written": written,
-            "written_next": written_next,
-            "txn_app": txn_app,
-            "txn_version": txn_version,
-        }
+        return self._staged(
+            "rewrite",
+            "MERGE",
+            version,
+            manifest,
+            base_columns=base_columns,
+            base_schema=base_schema,
+            affected=affected,
+            affected_next=affected_next,
+            written=written,
+            written_next=written_next,
+            txn_app=txn_app,
+            txn_version=txn_version,
+        )
 
     def delete_where(self, condition, mode: str = "copy_on_write") -> int:
         """DELETE: one scan finds the buckets containing matches; only
@@ -1608,21 +1516,14 @@ class ManifestVersionedTable:
                 .distinct()
                 .collect()
             )
-            return {
-                "kind": "dv_append",
-                "operation": "DELETE (merge-on-read)",
-                "base_version": version,
-                "base_n_buckets": manifest["n_buckets"],
-                "base_columns": manifest["columns"],
-                "base_schema": manifest["schema"],
-                "base_constraints": manifest.get("constraints", {}),
-                "base_generated": manifest.get("generated", {}),
-                "base_rebucket_target": manifest.get("rebucket_target"),
-                "dv_rel": rel,
-                "dv_dirs": dv_dirs,
-                "txn_app": None,
-                "txn_version": None,
-            }
+            return self._staged(
+                "dv_append",
+                "DELETE (merge-on-read)",
+                version,
+                manifest,
+                dv_rel=rel,
+                dv_dirs=dv_dirs,
+            )
         if mode != "copy_on_write":
             raise ValueError(
                 f"mode={mode!r} (expected 'copy_on_write' or 'merge_on_read')"
@@ -1663,9 +1564,28 @@ class ManifestVersionedTable:
                 )
             else:
                 written = self._write_buckets(kept)
+        return self._staged(
+            "rewrite",
+            "DELETE",
+            version,
+            manifest,
+            affected=affected,  # empty-after-delete buckets vanish
+            affected_next=affected_next,
+            written=written,
+            written_next=written_next,
+        )
+
+    # -- OCC conflict resolution (Delta's commit retry/rebase) ----------
+    @staticmethod
+    def _staged(
+        kind: str, operation: str, version: int, manifest: dict, **fields
+    ) -> dict:
+        """A staged transaction: the base snapshot it read (``base_*``,
+        checked against concurrent winners), the layout it writes
+        (``out_*``), then ``fields``, which override both."""
         return {
-            "kind": "rewrite",
-            "operation": "DELETE",
+            "kind": kind,
+            "operation": operation,
             "base_version": version,
             "base_n_buckets": manifest["n_buckets"],
             "base_columns": manifest["columns"],
@@ -1675,16 +1595,12 @@ class ManifestVersionedTable:
             "base_constraints": manifest.get("constraints", {}),
             "base_generated": manifest.get("generated", {}),
             "base_dvs": list(manifest.get("deletion_vectors", [])),
-            "base_rebucket_target": in_flight,
-            "affected": affected,  # empty-after-delete buckets vanish
-            "affected_next": affected_next,
-            "written": written,
-            "written_next": written_next,
+            "base_rebucket_target": manifest.get("rebucket_target"),
             "txn_app": None,
             "txn_version": None,
+            **fields,
         }
 
-    # -- OCC conflict resolution (Delta's commit retry/rebase) ----------
     def commit_staged(self, txn: dict, max_attempts: int = 10) -> int:
         """Phase 2: publish a staged transaction, RESOLVING commit races
         instead of just detecting them — Delta's conflict checker. A
@@ -1981,15 +1897,7 @@ class ManifestVersionedTable:
         return manifest, buckets
 
     def history(self) -> list[int]:
-        try:
-            found = sorted(
-                int(name[2:-5])
-                for name in os.listdir(os.path.join(self.path, "_manifests"))
-                if name.startswith("v=") and name.endswith(".json")
-            )
-        except FileNotFoundError:
-            return []
-        return found
+        return manifest_log.history(self.path)
 
     def describe_history(self) -> list[dict]:
         """Delta DESCRIBE HISTORY analogue: newest-first commit metadata —
@@ -2515,22 +2423,13 @@ class ManifestVersionedTable:
         # the rewrite reads THROUGH outstanding deletion vectors, so the
         # compacted files have the deletes applied physically — the new
         # manifest starts DV-free (Delta's PURGE side effect of OPTIMIZE)
-        return {
-            "kind": "compact",
-            "operation": op,
-            "base_version": version,
-            "base_n_buckets": manifest["n_buckets"],
-            "base_columns": manifest["columns"],
-            "base_schema": manifest["schema"],
-            "out_columns": manifest["columns"],
-            "out_schema": manifest["schema"],
-            "base_constraints": manifest.get("constraints", {}),
-            "base_generated": manifest.get("generated", {}),
-            "base_dvs": list(manifest.get("deletion_vectors", [])),
-            "base_buckets": {
-                b: list(ds) for b, ds in manifest["buckets"].items()
-            },
-            "written": self._write_buckets(
+        return self._staged(
+            "compact",
+            op,
+            version,
+            manifest,
+            base_buckets={b: list(ds) for b, ds in manifest["buckets"].items()},
+            written=self._write_buckets(
                 current,
                 cluster_by=cluster,
                 files_per_bucket=files_per_bucket,
@@ -2548,9 +2447,7 @@ class ManifestVersionedTable:
                     else {}
                 ),
             ),
-            "txn_app": None,
-            "txn_version": None,
-        }
+        )
 
     def compact_buckets(self, max_files: int = 8) -> int | None:
         """Targeted auto-compaction (Delta auto-compact / background
@@ -2583,24 +2480,16 @@ class ManifestVersionedTable:
         kept = self._read_dirs(
             manifest, self._bucket_dirs(manifest["buckets"], frag)
         )
-        txn = {
-            "kind": "rewrite",
-            "operation": f"COMPACT(buckets={len(frag)})",
-            "base_version": version,
-            "base_n_buckets": manifest["n_buckets"],
-            "base_columns": manifest["columns"],
-            "base_schema": manifest["schema"],
-            "out_columns": manifest["columns"],
-            "out_schema": manifest["schema"],
-            "base_constraints": manifest.get("constraints", {}),
-            "base_generated": manifest.get("generated", {}),
-            "base_dvs": list(manifest.get("deletion_vectors", [])),
-            "affected": frag,
-            "written": self._write_buckets(kept),
-            "txn_app": None,
-            "txn_version": None,
-        }
-        return self.commit_staged(txn)
+        return self.commit_staged(
+            self._staged(
+                "rewrite",
+                f"COMPACT(buckets={len(frag)})",
+                version,
+                manifest,
+                affected=frag,
+                written=self._write_buckets(kept),
+            )
+        )
 
     def coalesce_deletion_vectors(self) -> int | None:
         """Merge the accumulated DV sidecars into ONE (metadata + one
@@ -2645,22 +2534,15 @@ class ManifestVersionedTable:
         table metadata. O(file listings), no data reads."""
         version = self.latest_version()
         m = self._manifest(version)
-        n_files = 0
-        n_bytes = 0
-        for rel in self._all_dirs(m):
-            d = self._abs(rel)
-            for name in os.listdir(d):
-                if name.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(d, name))
+        sizes = [os.path.getsize(f) for f in manifest_log.data_files(self.path, m)]
         return {
             "format": "parquet-manifest",
             "location": self.path,
             "version": version,
             "key": m["key"],
             "numBuckets": m["n_buckets"],
-            "numFiles": n_files,
-            "sizeInBytes": n_bytes,
+            "numFiles": len(sizes),
+            "sizeInBytes": sum(sizes),
             "numDirs": len(self._bucket_dirs(m["buckets"])),
             "maxDirsPerBucket": max(
                 (len(ds) for ds in m["buckets"].values()), default=0
@@ -2673,25 +2555,19 @@ class ManifestVersionedTable:
 
     def generate_manifest(self) -> str:
         """O16: symlink-format manifest — the latest version's parquet
-        file list, straight from its bucket directories."""
-        manifest = self._manifest(self.latest_version())
-        files: list[str] = []
-        for rel in self._all_dirs(manifest):
-            d = self._abs(rel)
-            files.extend(
-                os.path.join(d, f)
-                for f in sorted(os.listdir(d))
-                if f.endswith(".parquet")
-            )
+        file list, straight from its bucket directories, published
+        atomically (external catalogs never see a torn list). Like the
+        Delta-log exporters it refuses outstanding deletion vectors (a
+        bare file list would resurrect the deleted rows; Delta refuses
+        symlink manifests on DV tables too) — optimize() first."""
+        version = self.latest_version()
+        manifest = self._manifest(version)
+        self._refuse_deletion_vectors(manifest, version)
+        files = manifest_log.data_files(self.path, manifest)
         manifest_dir = os.path.join(self.path, "_symlink_format_manifest")
         os.makedirs(manifest_dir, exist_ok=True)
         out = os.path.join(manifest_dir, "manifest")
-        import uuid as _uuid
-
-        tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            fh.write("\n".join(files) + "\n")
-        os.replace(tmp, out)  # external catalogs never see a torn list
+        manifest_log.publish(out, "\n".join(files) + "\n")
         return out
 
     def shallow_clone(
@@ -2835,8 +2711,9 @@ class ManifestVersionedTable:
 
     def export_delta_log(self) -> str:
         """Write the CURRENT version as a ``_delta_log`` in the public
-        Delta transaction-log format (protocol 1/2, one commit: protocol
-        + metaData + an add per data file) inside the table root — the
+        Delta transaction-log format (one commit: protocol + metaData +
+        the version's txn watermarks + an add per data file, the actions
+        a Delta checkpoint carries) inside the table root — the
         interop bridge outward: any Delta engine (including
         operators/deltalog.DeltaLogReader, round-trip-tested) can then
         read this table's snapshot directly; the data files are shared,
@@ -2845,68 +2722,75 @@ class ManifestVersionedTable:
         not update it — re-export on whatever cadence consumers need.
         Outstanding deletion vectors refuse (exported files alone would
         resurrect deleted rows — run optimize() first to materialize
-        them); the txn/stat layers are manifest-side refinements Delta
-        readers don't need."""
-        import json as _json
+        them). Log 0 is written by the tail exporter's own entry writer,
+        with the same export state, so ``export_delta_log_tail`` can
+        continue from it."""
         import shutil as _sh
 
-        from pyspark.sql.types import StructType
-
-        manifest = self._manifest(self.latest_version())
-        if manifest.get("deletion_vectors"):
-            raise ValueError(
-                "outstanding deletion vectors; optimize() first so the "
-                "exported files carry the deletes physically"
-            )
+        latest = self.latest_version()
+        manifest = self._manifest(latest)
+        self._refuse_deletion_vectors(manifest, latest)
         log_dir = os.path.join(self.path, "_delta_log")
         _sh.rmtree(log_dir, ignore_errors=True)
         os.makedirs(log_dir)
-        actions = [
-            self._delta_protocol_action(manifest),
-            self._delta_metadata_action(manifest),
-        ]
         dir_files: dict[str, list[str]] = {}
-        for rel in self._all_dirs(manifest):
-            d = self._abs(rel)
-            names = [n for n in sorted(os.listdir(d)) if n.endswith(".parquet")]
-            dir_files[rel] = names
-            for fname in names:
-                full = os.path.join(d, fname)
-                actions.append(
-                    {
-                        "add": {
-                            "path": os.path.join(rel, fname),
-                            "partitionValues": {},
-                            "size": os.path.getsize(full),
-                            "modificationTime": int(
-                                os.path.getmtime(full) * 1000
-                            ),
-                            "dataChange": True,
-                        }
-                    }
-                )
-        import uuid as _uuid
+        actions = [self._delta_protocol_action(manifest)]
+        actions += self._delta_actions_for_diff(None, manifest, dir_files)
+        return self._publish_delta_entry(log_dir, 0, actions, latest, dir_files)
 
-        commit = os.path.join(log_dir, f"{0:020d}.json")
-        tmp = f"{commit}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as fh:
-            for a in actions:
-                fh.write(_json.dumps(a) + "\n")
-        os.replace(tmp, commit)  # readers never see a torn log entry
-        state_path = os.path.join(log_dir, "_mvt_export_state")
-        s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-        with open(s_tmp, "w") as fh:
-            _json.dump(
-                {
-                    "manifest_version": self.latest_version(),
-                    "log_version": 0,
-                    # per-dir file index: a later tail export derives
-                    # removes from this even after the dir is vacuumed
-                    "dir_files": dir_files,
-                },
-                fh,
+    @staticmethod
+    def _refuse_deletion_vectors(manifest: dict, version: int) -> None:
+        """Every exporter hands out bare file lists, in which outstanding
+        merge-on-read deletes would resurrect."""
+        if manifest.get("deletion_vectors"):
+            raise ValueError(
+                f"version {version} carries outstanding deletion vectors; "
+                "optimize() first so exported files carry the deletes "
+                "physically"
             )
-        os.replace(s_tmp, state_path)
+
+    @staticmethod
+    def _publish_export_state(
+        log_dir: str,
+        manifest_version: int,
+        log_version: int,
+        dir_files: dict[str, list[str]],
+    ) -> None:
+        """The exporters' resume point; ``dir_files`` lets a later tail
+        export derive removes even after the dir is vacuumed."""
+        import json as _json
+
+        manifest_log.publish(
+            os.path.join(log_dir, _EXPORT_STATE),
+            _json.dumps(
+                {
+                    "manifest_version": manifest_version,
+                    "log_version": log_version,
+                    "dir_files": dir_files,
+                }
+            ),
+        )
+
+    def _publish_delta_entry(
+        self,
+        log_dir: str,
+        log_version: int,
+        actions: list[dict],
+        manifest_version: int,
+        dir_files: dict[str, list[str]],
+    ) -> str:
+        """Publish log entry ``<log_version>.json``, THEN the export state,
+        each atomically: no crash leaves a torn file, and a crash between
+        the two re-exports that version idempotently on the next call."""
+        import json as _json
+
+        commit = os.path.join(log_dir, f"{log_version:020d}.json")
+        manifest_log.publish(
+            commit, "".join(_json.dumps(a) + "\n" for a in actions)
+        )
+        self._publish_export_state(
+            log_dir, manifest_version, log_version, dir_files
+        )
         return commit
 
     # -- incremental (tailable) Delta-log export ------------------------
@@ -3016,11 +2900,8 @@ class ManifestVersionedTable:
                 # but LOUDLY — a vacuumed dir with no index means the
                 # removes are unrecoverable and the exported log would
                 # keep phantom adds live.
-                d = self._abs(rel)
                 try:
-                    names = sorted(
-                        n for n in os.listdir(d) if n.endswith(".parquet")
-                    )
+                    names = manifest_log.parquet_files(self._abs(rel))
                 except FileNotFoundError:
                     raise ValueError(
                         f"dropped dir {rel} was already vacuumed and the "
@@ -3045,26 +2926,23 @@ class ManifestVersionedTable:
         for rel in sorted(cur_dirs - prev_dirs):
             d = self._abs(rel)
             try:
-                listing = sorted(os.listdir(d))
+                names = manifest_log.parquet_files(d)
             except FileNotFoundError:
                 raise ValueError(
                     f"dir {rel} added by the exported version was already "
                     "vacuumed; its files cannot be referenced by the log "
                     "— re-export from a snapshot of a live version"
                 ) from None
-            names = [n for n in listing if n.endswith(".parquet")]
             dir_files[rel] = names
             for fname in names:
-                full = os.path.join(d, fname)
+                st = os.stat(os.path.join(d, fname))
                 actions.append(
                     {
                         "add": {
                             "path": os.path.join(rel, fname),
                             "partitionValues": {},
-                            "size": os.path.getsize(full),
-                            "modificationTime": int(
-                                os.path.getmtime(full) * 1000
-                            ),
+                            "size": st.st_size,
+                            "modificationTime": int(st.st_mtime * 1000),
                             "dataChange": True,
                         }
                     }
@@ -3094,7 +2972,7 @@ class ManifestVersionedTable:
         import json as _json
 
         log_dir = os.path.join(self.path, "_delta_log")
-        state_path = os.path.join(log_dir, "_mvt_export_state")
+        state_path = os.path.join(log_dir, _EXPORT_STATE)
         latest = self.latest_version()
         has_log_json = os.path.isdir(log_dir) and any(
             f.endswith(".json") for f in os.listdir(log_dir)
@@ -3143,19 +3021,7 @@ class ManifestVersionedTable:
             # "nothing exported yet", and the resume regenerates log 0
             # deterministically; without it the dir is indistinguishable
             # from a pre-r11 layout and re-export refuses.
-            import uuid as _uuid
-
-            s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(s_tmp, "w") as fh:
-                _json.dump(
-                    {
-                        "manifest_version": -1,
-                        "log_version": -1,
-                        "dir_files": {},
-                    },
-                    fh,
-                )
-            os.replace(s_tmp, state_path)
+            self._publish_export_state(log_dir, -1, -1, {})
         written: list[str] = []
         for v in range(from_mv + 1, latest + 1):
             if not os.path.exists(self._manifest_path(v)):
@@ -3164,44 +3030,14 @@ class ManifestVersionedTable:
                 # loses the same time-travel granularity after VACUUM)
                 continue
             m_v = self._manifest(v)
-            if m_v.get("deletion_vectors"):
-                raise ValueError(
-                    f"version {v} carries deletion vectors; optimize() "
-                    "first so exported files carry the deletes physically"
-                )
+            self._refuse_deletion_vectors(m_v, v)
             actions: list[dict] = []
             if m_prev is None:
                 actions.append(self._delta_protocol_action(m_v))
             actions.extend(self._delta_actions_for_diff(m_prev, m_v, dir_files))
-            # stage + atomic publish for BOTH files (r13 crash-injection
-            # sweep): a truncate-write crash would leave a TORN log JSON
-            # that tailing Delta readers choke on, or a torn state file
-            # that bricks the next re-export; with tmp + os.replace a
-            # crash at any instant leaves the previous state intact (the
-            # same fix the _LATEST pointer got in r12). The log JSON is
-            # published BEFORE the state file, so a crash between them
-            # merely re-exports that version idempotently (same content,
-            # same name) on the next call.
-            import uuid as _uuid
-
-            commit = os.path.join(log_dir, f"{next_log:020d}.json")
-            tmp = f"{commit}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                for a in actions:
-                    fh.write(_json.dumps(a) + "\n")
-            os.replace(tmp, commit)
-            written.append(commit)
-            s_tmp = f"{state_path}.tmp.{_uuid.uuid4().hex[:8]}"
-            with open(s_tmp, "w") as fh:
-                _json.dump(
-                    {
-                        "manifest_version": v,
-                        "log_version": next_log,
-                        "dir_files": dir_files,
-                    },
-                    fh,
-                )
-            os.replace(s_tmp, state_path)
+            written.append(
+                self._publish_delta_entry(log_dir, next_log, actions, v, dir_files)
+            )
             m_prev = m_v
             next_log += 1
         return written

@@ -23,20 +23,13 @@ from pucminas_data_pipelines_spark.fixtures import (
     TITANIC_DDL,
     TITANIC_NEW_ROWS,
 )
-from pucminas_data_pipelines_spark.io import from_rows
+from pucminas_data_pipelines_spark.io import from_rows, scratch_path
 from pucminas_data_pipelines_spark.operators.upsert import (
     ManifestVersionedTable,
     version_diff,
 )
 from pucminas_data_pipelines_spark.plans.registry import query
 from pucminas_data_pipelines_spark.tables import load_table
-
-# The versioned tables these queries write live under ``.tmp/`` at the
-# repository root (git-ignored).
-_TMP = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".tmp",
-)
 
 _LOWER_COLS = [
     "passengerid", "survived", "pclass", "name", "sex", "age",
@@ -99,7 +92,7 @@ def mutation_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-MERGE table state (reference O11 semantics:
     whenMatchedUpdateAll + whenNotMatchedInsertAll)."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_merge", n_buckets=1
+        spark, scratch_path("titanic_merge"), n_buckets=1
     )
     return _lowered(table.read())
 
@@ -112,7 +105,7 @@ def mutation_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """versionAsOf=0 read after the merge (reference O15): the pre-merge
     snapshot must be intact."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_timetravel", n_buckets=1
+        spark, scratch_path("titanic_timetravel"), n_buckets=1
     )
     return _lowered(table.read(version_as_of=0))
 
@@ -164,7 +157,7 @@ def mutation_cdc_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletes in one pass, unchanged rows silent. Delta surface this maps
     to: ``table_changes`` with readChangeFeed."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_cdc", n_buckets=1
+        spark, scratch_path("titanic_cdc"), n_buckets=1
     )
     table.delete_where(F.col("Survived") == 0)  # → version 2
     diff = version_diff(table, key="PassengerId", from_version=0, to_version=2)
@@ -187,7 +180,7 @@ def mutation_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DELETE WHERE survived = 0 on top of the merged state (the Delta
     delete clause family)."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_delete", n_buckets=1
+        spark, scratch_path("titanic_delete"), n_buckets=1
     )
     table.delete_where(F.col("Survived") == 0)
     return _lowered(table.read())
@@ -215,7 +208,7 @@ def mutation_manifest_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     Emitted as one summary row (counts + invariants) so the oracle is a
     literal VALUES check; the raw manifest paths contain nondeterministic
     part-file UUIDs and are asserted structurally instead."""
-    path = f"{_TMP}/titanic_manifest"
+    path = scratch_path("titanic_manifest")
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=1)
@@ -335,7 +328,7 @@ def mutation_overwrite_dynamic_partitions(spark: SparkSession, sf_dir: str) -> D
     registry invariant)."""
     from contextlib import contextmanager
 
-    path = f"{_TMP}/orders_dynpart"
+    path = scratch_path("orders_dynpart")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
@@ -484,7 +477,7 @@ def mutation_snapshot_expiry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note in operators/upsert.vacuum: retention bounds storage on a
     frequently-merged 100 TB table; the tradeoff is the time-travel
     horizon consumers keep."""
-    path = f"{_TMP}/expiry_table"
+    path = scratch_path("expiry_table")
     shutil.rmtree(path, ignore_errors=True)
     t = ManifestVersionedTable(spark, path, key="n_nationkey")
     base = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -541,7 +534,7 @@ def mutation_manifest_merge_bucketed(spark: SparkSession, sf_dir: str) -> DataFr
     touches and points every other bucket at version 0's files — the
     Delta add/remove-files idea that makes a small merge O(|source| +
     affected-bucket bytes) instead of O(table) at 100 TB."""
-    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_merge")
+    table = _run_manifest_scenario(spark, scratch_path("titanic_mvt_merge"))
     return _lowered(table.read())
 
 
@@ -562,7 +555,7 @@ def mutation_manifest_delete_null_predicate(
     Pins the null-safe keep-filter (NOT (cond <=> TRUE)) at driver level
     — the bucket-hash-dependent data-loss shape a plain ~cond had."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_delnull", n_buckets=1
+        spark, scratch_path("titanic_mvt_delnull"), n_buckets=1
     )
     table.delete_where(F.col("Age") < 35.0)
     return _lowered(table.read())
@@ -584,7 +577,7 @@ def mutation_manifest_append_pointread(
     rewritten), then read_keys([1, 892, 9999]) scans ONLY the buckets
     those keys hash into — manifest-level data skipping; the missing key
     simply matches nothing. Expected: base row 1 and appended row 892."""
-    path = f"{_TMP}/titanic_mvt_append"
+    path = scratch_path("titanic_mvt_append")
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=8)
@@ -615,7 +608,7 @@ def mutation_manifest_optimize_roundtrip(
     returns the post-optimize state — byte-identical semantics to the
     pre-optimize version — while older versions keep time-traveling
     (pinned in tests/test_manifest_table.py)."""
-    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_opt")
+    table = _run_manifest_scenario(spark, scratch_path("titanic_mvt_opt"))
     bump = table.read().withColumn(
         "Fare",
         (F.col("Fare").cast("decimal(12,4)") + F.lit(1.0).cast("decimal(2,1)"))
@@ -644,7 +637,7 @@ def mutation_manifest_vacuum_lifecycle(
     directories no surviving manifest references are removed, so v1/v2
     stay fully readable through their shared files (Delta's
     log-then-vacuum contract)."""
-    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_vac")
+    table = _run_manifest_scenario(spark, scratch_path("titanic_mvt_vac"))
     bump = from_rows(
         spark,
         [(2, 1, 1, "Cumings, Mrs. John Bradley", "female", 38.0, 1, 0,
@@ -697,7 +690,7 @@ def mutation_manifest_timerange_scan(spark: SparkSession, sf_dir: str) -> DataFr
     interior range) is pinned in tests/test_manifest_table.py."""
     import datetime as _dt
 
-    path = f"{_TMP}/events_mvt_range"
+    path = scratch_path("events_mvt_range")
     shutil.rmtree(path, ignore_errors=True)
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -745,7 +738,7 @@ def mutation_manifest_deletion_vectors(
     — the right trade for point deletes (GDPR erasure) scattered across
     a 100 TB table; the read-side anti-join broadcasts the match-sized
     DV, never shuffling the table."""
-    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_dv")
+    table = _run_manifest_scenario(spark, scratch_path("titanic_mvt_dv"))
     table.delete_where(F.col("Survived") == 0, mode="merge_on_read")
     return _lowered(table.read())
 
@@ -791,7 +784,7 @@ def mutation_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         apply_rollup_delta,
         rollup_from_scratch,
     )
-    path = f"{_TMP}/customer_mvt_rollup"
+    path = scratch_path("customer_mvt_rollup")
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -864,7 +857,7 @@ def mutation_incremental_rollup_minmax(
         apply_rollup_minmax_delta,
         rollup_minmax_from_scratch,
     )
-    path = f"{_TMP}/customer_mvt_minmax"
+    path = scratch_path("customer_mvt_minmax")
     shutil.rmtree(path, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal", "c_mktsegment"
@@ -953,7 +946,7 @@ def mutation_manifest_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame
     ~O(sqrt-of-selectivity) of the files per dimension instead of all
     of them; pruning happens at PLAN time from manifest stats — zero
     data reads for skipped files."""
-    path = f"{_TMP}/orders_mvt_zorder"
+    path = scratch_path("orders_mvt_zorder")
     shutil.rmtree(path, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -1007,7 +1000,7 @@ def mutation_manifest_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame
     Delta's column-mapping ids exist for) are pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_dropcol"
+        spark, scratch_path("titanic_mvt_dropcol")
     )
     for col in [
         "Pclass", "Name", "Sex", "Age", "SibSp",
@@ -1034,7 +1027,7 @@ def mutation_manifest_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     creation-time bucket count makes every merge rewrite 1/16th of the
     table forever."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_rebucket"
+        spark, scratch_path("titanic_mvt_rebucket")
     )
     v = table.rebucket(16)
     m = table._manifest(v)
@@ -1066,7 +1059,7 @@ def mutation_manifest_rebucket_incremental(
     appends and rewrite refusals are pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_rebucket_inc"
+        spark, scratch_path("titanic_mvt_rebucket_inc")
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1107,7 +1100,7 @@ def mutation_manifest_rebucket_shrink(
     escape for an over-bucketed table (created for a projected size
     that never came) whose tiny buckets tax every scan's planning."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_rebucket_shrink", n_buckets=16
+        spark, scratch_path("titanic_mvt_rebucket_shrink"), n_buckets=16
     )
     before = set(
         ManifestVersionedTable._all_dirs(table._manifest(table.latest_version()))
@@ -1160,7 +1153,7 @@ def mutation_manifest_rebucket_concurrent_merge(
     left in the commit layer. The OCC storm interleaving splits and
     merges is pinned in tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_rebucket_midmig"
+        spark, scratch_path("titanic_mvt_rebucket_midmig")
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1214,7 +1207,7 @@ def mutation_manifest_dv_delete_during_rebucket(
     unrelated splits rebase; concurrent DV/split storm) is pinned in
     tests/test_rebucket_dv.py."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_rebucket_dv"
+        spark, scratch_path("titanic_mvt_rebucket_dv")
     )
     v = table.rebucket_incremental(16, max_splits=2)
     m = table._manifest(v)
@@ -1265,19 +1258,19 @@ def streaming_manifest_cdf_replay(
     )
 
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_cdf_replay"
+        spark, scratch_path("titanic_mvt_cdf_replay")
     )
     try:
         spark.dataSource.register(ManifestCDFDataSource)
     except Exception:
         pass
-    out_dir = f"{_TMP}/titanic_mvt_cdf_replay_out"
-    ckpt = f"{_TMP}/titanic_mvt_cdf_replay_ckpt"
+    out_dir = scratch_path("titanic_mvt_cdf_replay_out")
+    ckpt = scratch_path("titanic_mvt_cdf_replay_ckpt")
     shutil.rmtree(out_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
     q = (
         spark.readStream.format("manifest_cdf")
-        .option("path", f"{_TMP}/titanic_mvt_cdf_replay")
+        .option("path", scratch_path("titanic_mvt_cdf_replay"))
         .option("startingVersion", -1)
         .load()
         .writeStream.format("parquet")
@@ -1333,7 +1326,7 @@ def mutation_manifest_autocompact(spark: SparkSession, sf_dir: str) -> DataFrame
     whole. The rebase-over-concurrent-append behavior is pinned in
     tests/test_manifest_table.py."""
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_autocompact"
+        spark, scratch_path("titanic_mvt_autocompact")
     )
     for row in _AUTOCOMPACT_APPENDS:
         table.append(from_rows(spark, [row], TITANIC_DDL))
@@ -1382,7 +1375,7 @@ def mutation_manifest_concurrent_writers(
     the streaming-ingest + maintenance-job topology every lakehouse
     runs; the full rebase-vs-refuse matrix is pinned in
     tests/test_occ_resolution.py."""
-    path = f"{_TMP}/titanic_mvt_occ"
+    path = scratch_path("titanic_mvt_occ")
     shutil.rmtree(path, ignore_errors=True)
     base = from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     table = ManifestVersionedTable(spark, path, key="PassengerId", n_buckets=4)
@@ -1415,7 +1408,7 @@ def mutation_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     table reads exactly as it did before any mutation; the oracle is the
     base fixture verbatim. Operation log + shared-files invariants are
     pinned in tests/test_manifest_table.py."""
-    table = _run_manifest_scenario(spark, f"{_TMP}/titanic_mvt_restore")
+    table = _run_manifest_scenario(spark, scratch_path("titanic_mvt_restore"))
     table.delete_where(F.col("Survived") == 0)
     table.restore(0)
     return _lowered(table.read())
@@ -1428,8 +1421,8 @@ def mutation_manifest_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mutation_manifest_delta_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Outbound Delta interop (operators/upsert.py export_delta_log +
     operators/deltalog.py DeltaLogReader): the manifest table's current
-    snapshot is exported as a PUBLIC-format _delta_log (protocol 1/2,
-    metaData + one add per shared data file — nothing copied) and read
+    snapshot is exported as a PUBLIC-format _delta_log (protocol,
+    metaData, txns + one add per shared data file — nothing copied) and read
     back purely through the protocol reader. The round trip through the
     public format must reproduce the post-MERGE state exactly (same
     oracle as mutation_merge_upsert); any Delta engine could do the
@@ -1438,7 +1431,7 @@ def mutation_manifest_delta_export(spark: SparkSession, sf_dir: str) -> DataFram
     from pucminas_data_pipelines_spark.operators.deltalog import DeltaLogReader
 
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_export"
+        spark, scratch_path("titanic_mvt_export")
     )
     table.export_delta_log()
     return _lowered(DeltaLogReader(spark, table.path).read())
@@ -1462,7 +1455,7 @@ def mutation_manifest_delta_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pucminas_data_pipelines_spark.operators.deltalog import DeltaLogReader
 
     table = _run_manifest_scenario(
-        spark, f"{_TMP}/titanic_mvt_tail"
+        spark, scratch_path("titanic_mvt_tail")
     )
     written = table.export_delta_log_tail()
     reader = DeltaLogReader(spark, table.path)
@@ -1516,8 +1509,8 @@ def mutation_manifest_shallow_clone(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    src_path = f"{_TMP}/mvt_clone_src"
-    dst_path = f"{_TMP}/mvt_clone_dst"
+    src_path = scratch_path("mvt_clone_src")
+    dst_path = scratch_path("mvt_clone_dst")
     for p in (src_path, dst_path):
         _sh.rmtree(p, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
@@ -1583,7 +1576,7 @@ def mutation_manifest_check_constraint(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = f"{_TMP}/mvt_check_constraint"
+    path = scratch_path("mvt_check_constraint")
     _sh.rmtree(path, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1648,7 +1641,7 @@ def mutation_manifest_generated_column(
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = f"{_TMP}/mvt_generated_col"
+    path = scratch_path("mvt_generated_col")
     _sh.rmtree(path, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -1709,7 +1702,7 @@ def mutation_tpch_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pucminas_data_pipelines_spark.tables import load_table
 
-    path = f"{_TMP}/mvt_tpch_refresh"
+    path = scratch_path("mvt_tpch_refresh")
     _sh.rmtree(path, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders")
     table = ManifestVersionedTable(spark, path, key="o_orderkey", n_buckets=8)

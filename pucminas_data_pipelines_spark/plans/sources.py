@@ -19,8 +19,6 @@ from pucminas_data_pipelines_spark.plans.mutation import _TYPED_SELECT, _values
 from pucminas_data_pipelines_spark.plans.registry import query
 from pucminas_data_pipelines_spark.tables import load_table
 
-_TMP = "/root/repo/.tmp"
-
 
 @query(
     "source_csv_roundtrip",
@@ -30,7 +28,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference O4 exactly: header'd ';'-separated CSV scanned with an
     explicit DDL schema (sparkcode/titanic_example_delta.py:19-22) — here
     round-tripped: engine writes the CSV, engine reads it back."""
-    path = f"{_TMP}/titanic_csv"
+    path = io.scratch_path("titanic_csv")
     shutil.rmtree(path, ignore_errors=True)
     base = io.from_rows(spark, TITANIC_BASE_ROWS, TITANIC_DDL)
     base.write.options(header=True, sep=";").mode("overwrite").csv(path)
@@ -51,7 +49,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON lines sink + schema'd JSON scan (no inference pass)."""
-    path = f"{_TMP}/orders_json"
+    path = io.scratch_path("orders_json")
     shutil.rmtree(path, ignore_errors=True)
     o = (
         load_table(spark, sf_dir, "orders")
@@ -79,7 +77,7 @@ def sink_csv_semicolon_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-side dialect parity for the reference's distinctive sep=';'
     CSV (O4 reads it; this proves the engine also EMITS it): testdata rows
     out through the ';' writer, back through the schema'd ';' reader."""
-    path = f"{_TMP}/nation_csv_semicolon"
+    path = io.scratch_path("nation_csv_semicolon")
     shutil.rmtree(path, ignore_errors=True)
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -107,7 +105,7 @@ def sink_csv_semicolon_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink + schema'd ORC scan (SURVEY §2.3: parquet/json/orc source
     coverage)."""
-    path = f"{_TMP}/customer_orc"
+    path = io.scratch_path("customer_orc")
     shutil.rmtree(path, ignore_errors=True)
     c = (
         load_table(spark, sf_dir, "customer")
@@ -136,7 +134,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned read-back. At 100 TB, partition layout is the first
     line of defense: a reader filtering on the partition column touches
     only matching directories (verified by plan tests)."""
-    path = f"{_TMP}/lineitem_partitioned"
+    path = io.scratch_path("lineitem_partitioned")
     shutil.rmtree(path, ignore_errors=True)
     l = load_table(spark, sf_dir, "lineitem")
     io.write(l, path, fmt="parquet", mode="overwrite", partition_by=["l_returnflag"])
@@ -168,7 +166,7 @@ def sink_partitioned_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sink_append_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Append-mode sink: two writes accumulate (vs O5's overwrite)."""
-    path = f"{_TMP}/orders_append"
+    path = io.scratch_path("orders_append")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     io.write(o.where(F.col("o_orderkey") <= 100), path, mode="overwrite")
@@ -212,7 +210,7 @@ def sink_compacted_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     output file count/size — at 100 TB the sink's file layout (not the
     query plan) decides downstream scan cost. Data equality is the oracle;
     test_bucketing pins the file count."""
-    path = f"{_TMP}/orders_compacted"
+    path = io.scratch_path("orders_compacted")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders")
     (
@@ -256,7 +254,7 @@ def sink_range_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     every subsequent reader file-level pruning — the standard
     write-once/read-many trade for a 100 TB fact table.
     """
-    path = f"{_TMP}/orders_range_sorted"
+    path = io.scratch_path("orders_range_sorted")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders")
     (
@@ -300,7 +298,7 @@ def source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     schema in a catalog and passing it explicitly. The read path it
     validates (old files + wider schema → NULL backfill) is identical.
     """
-    path = f"{_TMP}/orders_evolved"
+    path = io.scratch_path("orders_evolved")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders")
     (
@@ -350,7 +348,7 @@ def sink_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f"eng_blineitem_{suffix}", "lineitem", "l_orderkey"),
     ):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        path = f"{_TMP}/{tbl}"
+        path = io.scratch_path(f"{tbl}")
         shutil.rmtree(path, ignore_errors=True)
         (
             load_table(spark, sf_dir, src)
@@ -400,7 +398,7 @@ def sink_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     those are catalog statistics, not a scan."""
     from pucminas_data_pipelines_spark.functions import zorder as Z
 
-    path = f"{_TMP}/orders_zorder"
+    path = io.scratch_path("orders_zorder")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders")
     b = o.agg(
@@ -516,7 +514,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the text scan is splittable per file and carries one string
     column; the parse is codegen'd split/cast — the standard shape for
     100 TB of raw .txt/.jsonl shards before schema-on-read."""
-    path = f"{_TMP}/documents_text"
+    path = io.scratch_path("documents_text")
     shutil.rmtree(path, ignore_errors=True)
     docs = load_table(spark, sf_dir, "documents")
     docs.select(
@@ -579,7 +577,7 @@ def source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     once files exceed partition granularity."""
     import os
 
-    path = f"{_TMP}/binary_files"
+    path = io.scratch_path("binary_files")
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
     for name, payload in _BINARY_FIXTURE:
@@ -626,7 +624,7 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     in the same session (caught when the parity suite started running
     two SFs per session)."""
     sf_tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    path = f"{_TMP}/orders_malformed_csv_{sf_tag}"
+    path = io.scratch_path(f"orders_malformed_csv_{sf_tag}")
     shutil.rmtree(path, ignore_errors=True)
     good = (
         load_table(spark, sf_dir, "orders")
@@ -679,7 +677,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: rowTag framing splits files the same way the JSON-lines
     reader does; one XML record parses per row inside the scan."""
-    path = f"{_TMP}/orders_xml"
+    path = io.scratch_path("orders_xml")
     shutil.rmtree(path, ignore_errors=True)
     o = (
         load_table(spark, sf_dir, "orders")
@@ -725,7 +723,7 @@ def join_dpp_partitioned_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads every partition. The dim is broadcast (DPP's
     reuseBroadcastOnly default reuses that same broadcast for the pruning
     subquery, so pruning costs nothing extra)."""
-    path = f"{_TMP}/orders_dpp"
+    path = io.scratch_path("orders_dpp")
     shutil.rmtree(path, ignore_errors=True)
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderstatus"
@@ -779,7 +777,7 @@ def source_csv_multiline_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte offset, so one file = one task) — the reason 100 TB pipelines
     land CSV once, normalize, and store parquet; this query documents the
     constraint while proving the dialect correctness."""
-    path = f"{_TMP}/csv_multiline"
+    path = io.scratch_path("csv_multiline")
     shutil.rmtree(path, ignore_errors=True)
     rows = [
         (1, "plain", 10.5),
@@ -821,8 +819,8 @@ def sink_compressed_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
         .where(F.col("o_orderkey") <= 2000)
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
     )
-    jpath = f"{_TMP}/orders_json_gz"
-    ppath = f"{_TMP}/orders_parquet_snappy"
+    jpath = io.scratch_path("orders_json_gz")
+    ppath = io.scratch_path("orders_parquet_snappy")
     shutil.rmtree(jpath, ignore_errors=True)
     shutil.rmtree(ppath, ignore_errors=True)
     o.write.mode("overwrite").option("compression", "gzip").json(jpath)
@@ -878,7 +876,7 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
         spark.dataSource.register(JsonLinesSinkDataSource)
     except Exception:
         pass
-    path = f"{_TMP}/nation_pyds_sink"
+    path = io.scratch_path("nation_pyds_sink")
     shutil.rmtree(path, ignore_errors=True)
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
@@ -951,7 +949,7 @@ def source_delta_log_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pucminas_data_pipelines_spark.operators.deltalog import DeltaLogReader
 
-    root = "/root/repo/.tmp/delta_log_reader"
+    root = io.scratch_path("delta_log_reader")
     shutil.rmtree(root, ignore_errors=True)
     nation = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"

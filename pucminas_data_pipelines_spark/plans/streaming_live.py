@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pucminas_data_pipelines_spark.io import scratch_path
+
 # importing the batch twins guarantees their oracles are registered before
 # we reference them below (plans/__init__ imports events first anyway)
 from pucminas_data_pipelines_spark.plans import events as _batch_twins  # noqa: F401
@@ -165,10 +167,9 @@ def streaming_foreachbatch_upsert_live(spark: SparkSession, sf_dir: str) -> Data
 
     from pyspark.sql import functions as F
 
-    from pucminas_data_pipelines_spark.plans.mutation import _TMP
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = f"{_TMP}/stream_upsert_live"
+    base = scratch_path("stream_upsert_live")
     src, tbl = f"{base}/src", f"{base}/table"
     shutil.rmtree(base, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
@@ -314,7 +315,7 @@ def streaming_watermark_late_drop_live(spark: SparkSession, sf_dir: str) -> Data
     from pyspark.sql import functions as F
 
     out = jobs.run_late_data_drop_scenario(
-        spark, "/root/repo/.tmp/stream_late_src"
+        spark, scratch_path("stream_late_src")
     )
     return out.select("window_start", "n_events").orderBy("window_start")
 
@@ -356,9 +357,9 @@ def streaming_state_store_inspection(
     import glob as _glob
     import shutil as _shutil
 
-    for old in _glob.glob("/root/repo/.tmp/state_inspect_*"):
+    for old in _glob.glob(scratch_path("state_inspect_*")):
         _shutil.rmtree(old, ignore_errors=True)  # stale uuid checkpoints
-    ckpt = f"/root/repo/.tmp/state_inspect_{_uuid.uuid4().hex[:8]}"
+    ckpt = scratch_path(f"state_inspect_{_uuid.uuid4().hex[:8]}")
     with _pinned_shuffle_partitions(spark, 4):
         q = (
             agg.writeStream.format("memory")
@@ -415,9 +416,9 @@ def streaming_state_metadata_inspection(
     import glob as _glob
     import shutil as _shutil
 
-    for old in _glob.glob("/root/repo/.tmp/state_meta_*"):
+    for old in _glob.glob(scratch_path("state_meta_*")):
         _shutil.rmtree(old, ignore_errors=True)  # stale uuid checkpoints
-    ckpt = f"/root/repo/.tmp/state_meta_{_uuid.uuid4().hex[:8]}"
+    ckpt = scratch_path(f"state_meta_{_uuid.uuid4().hex[:8]}")
     with _pinned_shuffle_partitions(spark, 4):
         q = (
             agg.writeStream.format("memory")
@@ -469,7 +470,7 @@ def streaming_manifest_ingest_live(spark: SparkSession, sf_dir: str) -> DataFram
     from pucminas_data_pipelines_spark.streaming import jobs
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_manifest_ingest"
+    base = scratch_path("stream_manifest_ingest")
     src, tbl = f"{base}/src", f"{base}/table"
     shutil.rmtree(base, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
@@ -541,7 +542,7 @@ def streaming_manifest_source_live(spark: SparkSession, sf_dir: str) -> DataFram
     from pucminas_data_pipelines_spark.streaming import jobs
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_manifest_source"
+    base = scratch_path("stream_manifest_source")
     shutil.rmtree(base, ignore_errors=True)
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
@@ -696,7 +697,7 @@ def streaming_medallion_pipeline_live(
     from pucminas_data_pipelines_spark.streaming import jobs
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_medallion"
+    base = scratch_path("stream_medallion")
     shutil.rmtree(base, ignore_errors=True)
     events = _sweep_cap(
         load_table(spark, sf_dir, "events").select(
@@ -809,7 +810,7 @@ def streaming_manifest_cdf_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_manifest_cdf"
+    base = scratch_path("stream_manifest_cdf")
     shutil.rmtree(base, ignore_errors=True)
     events = _sweep_cap(
         load_table(spark, sf_dir, "events").select(
@@ -949,7 +950,7 @@ def streaming_incremental_mv_live(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     from pucminas_data_pipelines_spark.tables import load_table
 
-    base = "/root/repo/.tmp/stream_incremental_mv"
+    base = scratch_path("stream_incremental_mv")
     shutil.rmtree(base, ignore_errors=True)
     cust = _sweep_cap(
         load_table(spark, sf_dir, "customer").select(

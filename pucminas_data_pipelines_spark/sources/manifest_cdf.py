@@ -29,6 +29,12 @@ commit log and emits ROW-LEVEL CHANGES per commit, not snapshots:
   list, and bucket rewrites OVER outstanding DVs (a raw pre-image read
   would resurrect the DV'd rows as phantom deletes).
 
+The table's on-disk log (manifests, ``_LATEST``, DV sidecars, the
+manifest-pinned Arrow schema) is read through operators/manifest_log.py,
+and the commit-version offset protocol (``maxVersionsPerTrigger``,
+latest offset, commit) is the ``VersionOffsetReader`` this source shares
+with sources/manifest_stream.py.
+
 Key-level semantics require the merge key to be unique per row —
 guaranteed by MERGE/overwrite flows, and exactly ``version_diff``'s
 documented contract.
@@ -42,93 +48,16 @@ not the table.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator, Sequence
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
+from pyspark.sql.datasource import DataSource, InputPartition
+
+from pucminas_data_pipelines_spark.operators import manifest_log
+from pucminas_data_pipelines_spark.sources.manifest_stream import (
+    VersionOffsetReader,
+    open_table,
 )
-
-
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, "_manifests", f"v={version}.json")) as fh:
-        return json.load(fh)
-
-
-def _latest_version(path: str) -> int:
-    try:
-        with open(os.path.join(path, "_LATEST")) as fh:
-            v = int(fh.read().strip())
-    except FileNotFoundError:
-        v = -1
-    # _LATEST is a hint; the atomic manifest link is the commit — walk
-    # forward so a writer killed before the pointer flip still streams
-    # (mirrors ManifestVersionedTable.latest_version, r13)
-    while os.path.exists(
-        os.path.join(path, "_manifests", f"v={v + 1}.json")
-    ):
-        v += 1
-    return v
-
-
-def _abs(root: str, d: str) -> str:
-    return d if os.path.isabs(d) else os.path.join(root, d)
-
-
-def _arrow_target(manifest: dict):
-    """Arrow schema for the manifest's column list, derived from the
-    manifest's authoritative Spark schema (never from file footers) —
-    the same pinned-schema semantics as the batch twin's ``_reader()``
-    (operators/upsert.py): files written before a pre-stream schema
-    evolution yield NULL for columns they don't carry instead of
-    crashing the scan with ArrowInvalid (ADVICE r11 #2). All fields
-    nullable: null-fill is the whole point."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    full = to_arrow_schema(StructType.fromJson(manifest["schema"]))
-    return pa.schema(
-        [pa.field(c, full.field(c).type, nullable=True) for c in manifest["columns"]]
-    )
-
-
-def _conform(tbl, target):
-    """Project an Arrow table onto ``target``: reorder, cast where the
-    physical type differs, and null-fill columns absent from the file
-    (pre-evolution files)."""
-    import pyarrow as pa
-
-    cols = {}
-    for f in target:
-        if f.name in tbl.schema.names:
-            c = tbl.column(f.name)
-            cols[f.name] = c.cast(f.type) if c.type != f.type else c
-        else:
-            cols[f.name] = pa.nulls(tbl.num_rows, type=f.type)
-    return pa.table(cols).cast(target)
-
-
-def _scan_dirs(dirs: list[str], target):
-    """Read a list of data directories into ONE Arrow table with the
-    manifest-pinned ``target`` schema. Each directory is scanned
-    separately (its files share one write-time schema) and conformed,
-    so mixed-generation file lists never hit pyarrow's union-dataset
-    schema unification."""
-    import pyarrow as pa
-    import pyarrow.dataset as ds
-
-    if not dirs:
-        return target.empty_table()
-    pieces = []
-    for d in dirs:
-        dset = ds.dataset(d, format="parquet")
-        present = [c for c in target.names if c in dset.schema.names]
-        pieces.append(_conform(dset.to_table(columns=present), target))
-    return pa.concat_tables(pieces)
 
 
 class _InsertDirPartition(InputPartition):
@@ -162,19 +91,17 @@ class _DVDeletePartition(InputPartition):
     """One new deletion-vector sidecar: its (file, row) keys are the
     deleted rows, fetched by positional take."""
 
-    def __init__(self, root: str, dv_abs: str, schema, version: int):
+    def __init__(self, root: str, dv_rel: str, schema, version: int):
         self.root = root
-        self.dv_abs = dv_abs
+        self.dv_rel = dv_rel
         self.schema = schema
         self.version = version
 
 
-class ManifestCDFStreamReader(DataSourceStreamReader):
+class ManifestCDFStreamReader(VersionOffsetReader):
     def __init__(self, options: dict):
-        self.path = os.path.abspath(options["path"].rstrip("/"))
-        latest = _latest_version(self.path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {self.path}")
+        super().__init__(options)
+        latest = self.opened_version
         self.start_version = int(options.get("startingVersion", latest))
         if self.start_version < -1 or self.start_version > latest:
             raise ValueError(
@@ -182,24 +109,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                 f"pass -1 for full-history replay, or a version in "
                 f"[0, {latest}] (latest commit) to emit changes after it"
             )
-        # Delta maxFilesPerTrigger analogue at commit grain (see
-        # manifest_stream.py): bound how many commits one micro-batch
-        # diffs, so a CDF consumer starting against a long backlog
-        # drains it in bounded batches. 0/absent = unbounded.
-        self.max_versions = int(options.get("maxVersionsPerTrigger", 0))
-        self._progress: int | None = None
-
-    def _note_progress(self, version: int) -> None:
-        if self._progress is None or version > self._progress:
-            self._progress = version
-
-    def _rate_limited(self, latest: int) -> int:
-        # restart-safe: cap only once this process observed an offset
-        # (initialOffset or a checkpointed start) — a capped offset
-        # behind an unseen checkpoint would regress the offset log
-        if self.max_versions > 0 and self._progress is not None:
-            return min(latest, self._progress + self.max_versions)
-        return latest
 
     # -- offsets ---------------------------------------------------------
     def initialOffset(self) -> dict:
@@ -213,21 +122,18 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         self._note_progress(self.start_version)
         return {"version": self.start_version}
 
-    def latestOffset(self) -> dict:
-        return {"version": self._rate_limited(_latest_version(self.path))}
-
     # -- planning --------------------------------------------------------
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._note_progress(start["version"])  # learn the resumed offset
         out: list[InputPartition] = []
         for v in range(start["version"] + 1, end["version"] + 1):
-            m_v = _manifest(self.path, v)
+            m_v = manifest_log.read_manifest(self.path, v)
             if v == 0:
                 # full-history replay (startingVersion=-1): version 0
                 # diffs against the empty table — every dir is inserts
                 m_prev = dict(m_v, buckets={}, deletion_vectors=[])
             else:
-                m_prev = _manifest(self.path, v - 1)
+                m_prev = manifest_log.read_manifest(self.path, v - 1)
             if m_prev["columns"] != m_v["columns"]:
                 raise ValueError(
                     f"schema changed at version {v}; the change feed is "
@@ -243,7 +149,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     "per-bucket diffs would emit phantom changes) — "
                     "restart from a fresh checkpoint"
                 )
-            target = _arrow_target(m_v)
+            target = manifest_log._arrow_target(m_v)
             key = m_v["key"]
             prev_dvs = m_prev.get("deletion_vectors", [])
             cur_dvs = m_v.get("deletion_vectors", [])
@@ -254,11 +160,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     "from a fresh snapshot"
                 )
             for dv_rel in cur_dvs[len(prev_dvs):]:
-                out.append(
-                    _DVDeletePartition(
-                        self.path, _abs(self.path, dv_rel), target, v
-                    )
-                )
+                out.append(_DVDeletePartition(self.path, dv_rel, target, v))
             bf, bt = m_prev["buckets"], m_v["buckets"]
             for b in sorted(set(bf) | set(bt)):
                 pre, post = bf.get(b, []), bt.get(b, [])
@@ -269,7 +171,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     for d in post[len(pre):]:
                         out.append(
                             _InsertDirPartition(
-                                _abs(self.path, d), target, v
+                                manifest_log.resolve(self.path, d), target, v
                             )
                         )
                     continue
@@ -282,8 +184,8 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
                     )
                 out.append(
                     _BucketDiffPartition(
-                        [_abs(self.path, d) for d in pre],
-                        [_abs(self.path, d) for d in post],
+                        [manifest_log.resolve(self.path, d) for d in pre],
+                        [manifest_log.resolve(self.path, d) for d in post],
                         key,
                         target,
                         v,
@@ -296,7 +198,7 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         if isinstance(partition, _InsertDirPartition):
             if not partition.abs_dir:
                 return iter(())
-            tbl = _scan_dirs([partition.abs_dir], partition.schema)
+            tbl = manifest_log._scan_dirs([partition.abs_dir], partition.schema)
             return self._stamped(tbl, "insert", partition.version)
         if isinstance(partition, _DVDeletePartition):
             return self._read_dv_deletes(partition)
@@ -318,22 +220,18 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        dv = ds.dataset(p.dv_abs, format="parquet").to_table()
-        by_file: dict[str, list[int]] = {}
-        for f, r in zip(
-            dv.column("__dv_file").to_pylist(),
-            dv.column("__dv_row").to_pylist(),
-        ):
-            by_file.setdefault(f, []).append(r)
+        by_file = manifest_log.dv_positions(p.root, [p.dv_rel])
         pieces = []
         for f, rows in sorted(by_file.items()):
-            dset = ds.dataset(_abs(p.root, f), format="parquet")
+            dset = ds.dataset(manifest_log.resolve(p.root, f), format="parquet")
             present = [c for c in p.schema.names if c in dset.schema.names]
             # take by position FIRST (row indices are per-file), then
             # conform to the manifest-pinned schema (pre-evolution files
             # null-fill later-added columns instead of ArrowInvalid)
             pieces.append(
-                _conform(dset.to_table(columns=present).take(sorted(rows)), p.schema)
+                manifest_log._conform(
+                    dset.to_table(columns=present).take(rows), p.schema
+                )
             )
         if not pieces:
             return iter(())
@@ -347,7 +245,9 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
         target = p.schema
 
         def load(dirs):
-            return _scan_dirs(dirs, target).to_pandas(types_mapper=pd.ArrowDtype)
+            return manifest_log._scan_dirs(dirs, target).to_pandas(
+                types_mapper=pd.ArrowDtype
+            )
 
         pre, post = load(p.pre_dirs), load(p.post_dirs)
         payload = [c for c in target.names if c != p.key]
@@ -405,11 +305,6 @@ class ManifestCDFStreamReader(DataSourceStreamReader):
             out.extend(self._stamped(tbl, kind, p.version))
         return iter(out)
 
-    def commit(self, end: dict) -> None:
-        # offsets live in the stream checkpoint; advance the local
-        # watermark so the rate limiter moves batch by batch
-        self._note_progress(end["version"])
-
 
 class ManifestCDFDataSource(DataSource):
     """Usage::
@@ -433,11 +328,10 @@ class ManifestCDFDataSource(DataSource):
             StructType,
         )
 
-        path = os.path.abspath(self.options["path"].rstrip("/"))
-        latest = _latest_version(path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {path}")
-        base = StructType.fromJson(_manifest(path, latest)["schema"])
+        path, latest = open_table(self.options)
+        base = StructType.fromJson(
+            manifest_log.read_manifest(path, latest)["schema"]
+        )
         return StructType(
             list(base.fields)
             + [

@@ -25,6 +25,13 @@ diff. `spark.readStream.format("manifest_stream")` tails the commit log:
   without ignoreChanges/ignoreDeletes, where silently re-emitting
   rewritten buckets would double-count every surviving row downstream.
 
+The table's on-disk log (manifests, the ``_LATEST`` hint, DV sidecars,
+the manifest-pinned Arrow schema) is read through
+operators/manifest_log.py. ``VersionOffsetReader`` here is the
+commit-version offset protocol (``maxVersionsPerTrigger``, latest
+offset, commit) this source shares with the change-feed source
+(sources/manifest_cdf.py).
+
 At 100 TB this is the standard lakehouse CDC fan-out: ingest commits
 append every few minutes, and any number of downstream streams tail the
 same table with independent checkpoints, each paying only the new
@@ -33,7 +40,6 @@ files' bytes per trigger.
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator, Sequence
 
@@ -43,35 +49,62 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from pucminas_data_pipelines_spark.operators import manifest_log
+
 _APPEND_OK = {"APPEND"}
 
 
-def _manifest(path: str, version: int) -> dict:
-    with open(os.path.join(path, "_manifests", f"v={version}.json")) as fh:
-        return json.load(fh)
+def open_table(options: dict) -> tuple[str, int]:
+    """(absolute table root, latest version) for the ``path`` option;
+    refuses a path that holds no manifest table."""
+    path = os.path.abspath(options["path"].rstrip("/"))
+    latest = manifest_log.latest_version(path)
+    if latest < 0:
+        raise ValueError(f"no manifest table at {path}")
+    return path, latest
 
 
-def _latest_version(path: str) -> int:
-    try:
-        with open(os.path.join(path, "_LATEST")) as fh:
-            v = int(fh.read().strip())
-    except FileNotFoundError:
-        v = -1
-    # _LATEST is a hint; the atomic manifest link is the commit — walk
-    # forward so a writer killed before the pointer flip still streams
-    # (mirrors ManifestVersionedTable.latest_version, r13)
-    while os.path.exists(
-        os.path.join(path, "_manifests", f"v={v + 1}.json")
-    ):
-        v += 1
-    return v
+class VersionOffsetReader(DataSourceStreamReader):
+    """The commit-version offset protocol both manifest stream sources
+    share: offsets are ``{"version": N}``, the latest offset is the
+    table's latest commit, optionally capped by
+    ``maxVersionsPerTrigger``. ``initialOffset``, ``partitions`` and
+    ``read`` are each source's own."""
 
+    def __init__(self, options: dict):
+        self.path, self.opened_version = open_table(options)
+        # Delta maxFilesPerTrigger analogue at commit grain: bound how
+        # many versions one micro-batch may cover, so a stream starting
+        # against a long backlog drains it in bounded batches instead
+        # of planning months of commits into one. 0/absent = unbounded.
+        self.max_versions = int(options.get("maxVersionsPerTrigger", 0))
+        self._progress: int | None = None  # newest offset seen locally
 
-def _dirs(manifest: dict) -> list[str]:
-    # union both generations: a mid-rebucket snapshot's rows live in
-    # "buckets" (old gen) plus "buckets_next" (already-migrated)
-    maps = [manifest["buckets"], manifest.get("buckets_next", {})]
-    return [d for m in maps for b in sorted(m) for d in m[b]]
+    def _note_progress(self, version: int) -> None:
+        if self._progress is None or version > self._progress:
+            self._progress = version
+
+    def _rate_limited(self, latest: int) -> int:
+        """Cap the batch end at progress + maxVersionsPerTrigger.
+        RESTART-SAFE by construction: the cap applies only once this
+        process has observed an offset (initialOffset on a fresh start,
+        or the checkpointed start passed to partitions()); the first
+        trigger after a checkpoint resume therefore runs uncapped —
+        returning a capped offset BEHIND an unseen checkpoint would
+        regress the offset log and re-emit committed versions."""
+        if self.max_versions > 0 and self._progress is not None:
+            return min(latest, self._progress + self.max_versions)
+        return latest
+
+    def latestOffset(self) -> dict:
+        return {
+            "version": self._rate_limited(manifest_log.latest_version(self.path))
+        }
+
+    def commit(self, end: dict) -> None:
+        # offsets live in the stream checkpoint; remember the committed
+        # watermark so the rate limiter advances batch by batch
+        self._note_progress(end["version"])
 
 
 class _DirPartition(InputPartition):
@@ -102,88 +135,28 @@ class _DirPartition(InputPartition):
         self.schema = schema
 
 
-class ManifestStreamReader(DataSourceStreamReader):
-    def __init__(self, options: dict):
-        self.path = os.path.abspath(options["path"].rstrip("/"))
-        if _latest_version(self.path) < 0:
-            raise ValueError(f"no manifest table at {self.path}")
-        # Delta maxFilesPerTrigger analogue at commit grain: bound how
-        # many versions one micro-batch may cover, so a stream starting
-        # against a long backlog drains it in bounded batches instead
-        # of planning months of commits into one. 0/absent = unbounded.
-        self.max_versions = int(options.get("maxVersionsPerTrigger", 0))
-        self._progress: int | None = None  # newest offset seen locally
-
-    def _note_progress(self, version: int) -> None:
-        if self._progress is None or version > self._progress:
-            self._progress = version
-
-    def _rate_limited(self, latest: int) -> int:
-        """Cap the batch end at progress + maxVersionsPerTrigger.
-        RESTART-SAFE by construction: the cap applies only once this
-        process has observed an offset (initialOffset on a fresh start,
-        or the checkpointed start passed to partitions()); the first
-        trigger after a checkpoint resume therefore runs uncapped —
-        returning a capped offset BEHIND an unseen checkpoint would
-        regress the offset log and re-emit committed versions."""
-        if self.max_versions > 0 and self._progress is not None:
-            return min(latest, self._progress + self.max_versions)
-        return latest
-
-    # -- offset protocol ------------------------------------------------
+class ManifestStreamReader(VersionOffsetReader):
     def initialOffset(self) -> dict:
         # version -1 = "before the table existed": the first batch emits
         # the full snapshot of whatever version latestOffset sees first.
         self._note_progress(-1)
         return {"version": -1}
 
-    def latestOffset(self) -> dict:
-        return {"version": self._rate_limited(_latest_version(self.path))}
-
-    def _dv_rows_by_dir(
-        self, manifest: dict
-    ) -> dict[str, dict[str, list[int]]]:
-        """Read the manifest's DV sidecars (driver-side, match-sized —
-        the same rows the batch reader broadcasts) and group the deleted
-        positions as rel_dir -> file name -> sorted row indices, so each
-        snapshot partition ships only its own directory's deletes."""
-        import pyarrow.dataset as ds
-
-        out: dict[str, dict[str, list[int]]] = {}
-        dvs = manifest.get("deletion_vectors", [])
-        if not dvs:
-            return out
-        for p in dvs:
-            dv = ds.dataset(
-                os.path.join(self.path, p), format="parquet"
-            ).to_table()
-            for f, r in zip(
-                dv.column("__dv_file").to_pylist(),
-                dv.column("__dv_row").to_pylist(),
-            ):
-                d, name = os.path.split(f)
-                out.setdefault(d, {}).setdefault(name, []).append(r)
-        for files in out.values():
-            for rows in files.values():
-                rows.sort()
-        return out
-
     # -- planning ---------------------------------------------------------
     def _added_dirs(self, start_v: int, end_v: int) -> tuple[list[str], list[str]]:
         """Directories added in versions (start_v, end_v], plus the final
         column layout. Snapshot semantics when start_v < 0 (initial
         batch); append-only guard for tailed commits."""
-        end_m = _manifest(self.path, end_v)
+        end_m = manifest_log.read_manifest(self.path, end_v)
         if start_v < 0:
-            return _dirs(end_m), end_m["columns"]
-        start_m = _manifest(self.path, start_v)
+            return manifest_log.data_dirs(end_m), end_m["columns"]
+        start_m = manifest_log.read_manifest(self.path, start_v)
         if start_m["columns"] != end_m["columns"]:
             raise ValueError(
                 "schema changed between streamed versions "
                 f"{start_v} and {end_v}; restart the stream from a fresh "
                 "checkpoint to pick up the evolved schema"
             )
-        added: list[str] = []
         # DV baseline: a stream may legitimately start on a DV-bearing
         # table (the initial snapshot subtracts outstanding deletes), and
         # appends inherit the snapshot's DV list unchanged — only a DV
@@ -192,7 +165,7 @@ class ManifestStreamReader(DataSourceStreamReader):
         # cur_dvs[len(prev_dvs):] diff.
         base_dvs = start_m.get("deletion_vectors", [])
         for v in range(start_v + 1, end_v + 1):
-            m = _manifest(self.path, v)
+            m = manifest_log.read_manifest(self.path, v)
             op = m.get("commit_info", {}).get("operation", "UNKNOWN")
             if op not in _APPEND_OK:
                 raise ValueError(
@@ -207,8 +180,8 @@ class ManifestStreamReader(DataSourceStreamReader):
                     "relative to the stream's baseline; append-only "
                     "streaming cannot subtract rows already emitted"
                 )
-        prev = set(_dirs(start_m))
-        added = [d for d in _dirs(end_m) if d not in prev]
+        prev = set(manifest_log.data_dirs(start_m))
+        added = [d for d in manifest_log.data_dirs(end_m) if d not in prev]
         return added, end_m["columns"]
 
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
@@ -220,19 +193,19 @@ class ManifestStreamReader(DataSourceStreamReader):
         # mid-stream DV churn still refuses in _added_dirs' tail guard.
         # Snapshot partitions also carry the manifest-pinned Arrow
         # schema so pre-evolution files null-fill later-added columns.
-        dv_by_dir: dict = {}
+        dv_by_dir: dict[str, dict[str, list[int]]] = {}
         schema = None
         if start["version"] < 0:
-            from pucminas_data_pipelines_spark.sources.manifest_cdf import (
-                _arrow_target,
-            )
-
-            end_m = _manifest(self.path, end["version"])
-            dv_by_dir = self._dv_rows_by_dir(end_m)
-            schema = _arrow_target(end_m)
+            end_m = manifest_log.read_manifest(self.path, end["version"])
+            for f, rows in manifest_log.dv_positions(
+                self.path, end_m.get("deletion_vectors", [])
+            ).items():
+                d, name = os.path.split(f)
+                dv_by_dir.setdefault(d, {})[name] = rows
+            schema = manifest_log._arrow_target(end_m)
         return [
             _DirPartition(
-                d if os.path.isabs(d) else os.path.join(self.path, d),
+                manifest_log.resolve(self.path, d),
                 columns,
                 dv_by_dir.get(d),
                 schema,
@@ -275,10 +248,6 @@ class ManifestStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.dataset as ds
 
-        from pucminas_data_pipelines_spark.sources.manifest_cdf import (
-            _conform,
-        )
-
         for f in sorted(dataset.files):
             fds = ds.dataset(f, format="parquet")
             present = [
@@ -291,13 +260,8 @@ class ManifestStreamReader(DataSourceStreamReader):
                 mask[dead] = False
                 tbl = tbl.filter(pa.array(mask))
             if partition.schema is not None:
-                tbl = _conform(tbl, partition.schema)
+                tbl = manifest_log._conform(tbl, partition.schema)
             yield from tbl.to_batches()
-
-    def commit(self, end: dict) -> None:
-        # offsets live in the stream checkpoint; remember the committed
-        # watermark so the rate limiter advances batch by batch
-        self._note_progress(end["version"])
 
 
 class ManifestStreamDataSource(DataSource):
@@ -314,11 +278,10 @@ class ManifestStreamDataSource(DataSource):
     def schema(self):
         from pyspark.sql.types import StructType
 
-        path = os.path.abspath(self.options["path"].rstrip("/"))
-        latest = _latest_version(path)
-        if latest < 0:
-            raise ValueError(f"no manifest table at {path}")
-        return StructType.fromJson(_manifest(path, latest)["schema"])
+        path, latest = open_table(self.options)
+        return StructType.fromJson(
+            manifest_log.read_manifest(path, latest)["schema"]
+        )
 
     def streamReader(self, schema) -> ManifestStreamReader:
         return ManifestStreamReader(self.options)

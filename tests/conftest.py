@@ -15,12 +15,13 @@ SF_BENCH = "/root/testdata/sf0.1"
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
+    warehouse = str(tmp_path_factory.mktemp("warehouse"))
     spark = get_spark(
         app_name="engine-tests",
         master="local[4]",
         shuffle_partitions=8,
-        extra_conf={"spark.sql.warehouse.dir": "/root/repo/.tmp/warehouse"},
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield spark
     spark.stop()

@@ -4,6 +4,8 @@ perf signal), and the registry must keep the driver window as its prefix."""
 
 from __future__ import annotations
 
+import os
+
 import bench
 from pucminas_data_pipelines_spark import plans
 
@@ -25,7 +27,9 @@ def test_every_registered_query_documented_in_coverage():
     query name must appear in it (individually or inside a family row)."""
     from pucminas_data_pipelines_spark import plans
 
-    cov = open("/root/repo/COVERAGE.md").read()
+    cov = open(
+        os.path.join(os.path.dirname(os.path.dirname(__file__)), "COVERAGE.md")
+    ).read()
     missing = [n for n in plans.QUERIES if n not in cov]
     assert not missing, f"queries missing from COVERAGE.md: {missing}"
 

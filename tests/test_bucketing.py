@@ -4,15 +4,12 @@ shuffle at read time — the co-located-join lever for 100 TB
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
+from pucminas_data_pipelines_spark.io import scratch_path
 from pucminas_data_pipelines_spark.tables import load_table
 from tests.conftest import SF_SMOKE
-
-WAREHOUSE = "/root/repo/.tmp/warehouse"
 
 
 @pytest.fixture(scope="module")
@@ -37,7 +34,6 @@ def bucketed(spark):
     yield
     spark.sql("DROP TABLE IF EXISTS b_orders")
     spark.sql("DROP TABLE IF EXISTS b_lineitem")
-    shutil.rmtree(WAREHOUSE, ignore_errors=True)
 
 
 def test_bucketed_join_avoids_shuffle(spark, bucketed):
@@ -70,7 +66,7 @@ def test_compaction_bounds_file_count(spark):
     from pucminas_data_pipelines_spark.plans import QUERIES
 
     QUERIES["sink_compacted_files"](spark, SF_SMOKE).collect()
-    files = glob.glob("/root/repo/.tmp/orders_compacted/*.parquet")
+    files = glob.glob(scratch_path("orders_compacted", "*.parquet"))
     assert len(files) == 2  # repartition(2), under maxRecordsPerFile
 
 
@@ -80,13 +76,12 @@ def test_range_sorted_layout_prunes(spark):
     import glob
 
     from pucminas_data_pipelines_spark.plans.sources import (
-        _TMP,
         sink_range_sorted_layout,
     )
     from tests.conftest import SF_SMOKE
 
     sink_range_sorted_layout(spark, SF_SMOKE).collect()
-    files = sorted(glob.glob(f"{_TMP}/orders_range_sorted/*.parquet"))
+    files = sorted(glob.glob(scratch_path("orders_range_sorted", "*.parquet")))
     assert len(files) >= 2
     ranges = []
     for f in files:
@@ -126,10 +121,10 @@ def test_zorder_layout_clusters_both_dimensions(spark):
     from pucminas_data_pipelines_spark.plans import QUERIES
 
     QUERIES["sink_zorder_layout"](spark, SF_SMOKE).collect()
-    files = glob.glob("/root/repo/.tmp/orders_zorder/*.parquet")
+    files = glob.glob(scratch_path("orders_zorder", "*.parquet"))
     assert len(files) >= 4
     g = (
-        spark.read.parquet("/root/repo/.tmp/orders_zorder")
+        spark.read.parquet(scratch_path("orders_zorder"))
         .agg(
             (F.max("o_custkey") - F.min("o_custkey")).alias("ck"),
             (

@@ -7,8 +7,6 @@ DV rewrites, rewrites over outstanding DVs) must refuse loudly."""
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -24,23 +22,20 @@ from pucminas_data_pipelines_spark.sources.manifest_cdf import (
 from pucminas_data_pipelines_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
-BASE = "/root/repo/.tmp/test_manifest_cdf"
-
-
 @pytest.fixture()
-def table(spark):
-    shutil.rmtree(BASE, ignore_errors=True)
-    t = ManifestVersionedTable(spark, BASE, key="event_id", n_buckets=4)
+def table(spark, tmp_path):
+    t = ManifestVersionedTable(
+        spark, str(tmp_path / "t"), key="event_id", n_buckets=4
+    )
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "event_type", "value"
     )
     t.overwrite(ev.where(F.col("event_id") % 3 == 0))
-    yield t, ev
-    shutil.rmtree(BASE, ignore_errors=True)
+    return t, ev
 
 
-def _reader(start=0) -> ManifestCDFStreamReader:
-    return ManifestCDFStreamReader({"path": BASE, "startingVersion": start})
+def _reader(t, start=0) -> ManifestCDFStreamReader:
+    return ManifestCDFStreamReader({"path": t.path, "startingVersion": start})
 
 
 def _changes(reader, start_v, end_v):
@@ -54,7 +49,7 @@ def _changes(reader, start_v, end_v):
 def test_append_plans_insert_partitions_only(table):
     t, ev = table
     t.append(ev.where(F.col("event_id") % 3 == 1))
-    r = _reader()
+    r = _reader(t)
     parts = r.partitions({"version": 0}, {"version": 1})
     assert parts and all(isinstance(p, _InsertDirPartition) for p in parts)
     rows = _changes(r, 0, 1)
@@ -78,7 +73,7 @@ def test_merge_changes_equal_batch_version_diff(table, spark):
     t.merge(src)
     got = {
         (row["event_id"], row["_change_type"])
-        for row in _changes(_reader(), 0, 1)
+        for row in _changes(_reader(t), 0, 1)
     }
     want = {
         (row["event_id"], row["_change_type"])
@@ -90,7 +85,7 @@ def test_merge_changes_equal_batch_version_diff(table, spark):
 def test_dv_delete_emits_exactly_the_marked_rows(table, spark):
     t, ev = table
     t.delete_where(F.col("event_type") == "click", mode="merge_on_read")
-    rows = _changes(_reader(), 0, 1)
+    rows = _changes(_reader(t), 0, 1)
     assert rows and {r["_change_type"] for r in rows} == {"delete"}
     want = sorted(
         r["event_id"]
@@ -110,7 +105,7 @@ def test_multi_commit_batch_covers_each_version(table, spark):
             "event_id bigint, event_type string, value double",
         )
     )                                                # v2
-    rows = _changes(_reader(), 0, 2)
+    rows = _changes(_reader(t), 0, 2)
     by_v = {}
     for r in rows:
         by_v.setdefault(r["_commit_version"], []).append(r)
@@ -121,7 +116,7 @@ def test_multi_commit_batch_covers_each_version(table, spark):
     ] == [(-5, "insert")]
 
 
-def test_non_replayable_history_refuses(table, spark):
+def test_non_replayable_history_refuses(table, spark, tmp_path):
     t, ev = table
     # schema evolution
     t.append(
@@ -131,17 +126,19 @@ def test_non_replayable_history_refuses(table, spark):
         merge_schema=True,
     )
     with pytest.raises(ValueError, match="schema changed"):
-        _reader().partitions({"version": 0}, {"version": 1})
+        _reader(t).partitions({"version": 0}, {"version": 1})
     # bucket-count change
-    shutil.rmtree(BASE, ignore_errors=True)
-    t2 = ManifestVersionedTable(spark, BASE, key="event_id", n_buckets=4)
+    t2 = ManifestVersionedTable(
+        spark, str(tmp_path / "t2"), key="event_id", n_buckets=4
+    )
     t2.overwrite(ev.where(F.col("event_id") % 3 == 0))
     t2.rebucket(8)
     with pytest.raises(ValueError, match="bucket count"):
-        _reader().partitions({"version": 0}, {"version": 1})
+        _reader(t2).partitions({"version": 0}, {"version": 1})
     # rewrite over outstanding DVs
-    shutil.rmtree(BASE, ignore_errors=True)
-    t3 = ManifestVersionedTable(spark, BASE, key="event_id", n_buckets=4)
+    t3 = ManifestVersionedTable(
+        spark, str(tmp_path / "t3"), key="event_id", n_buckets=4
+    )
     t3.overwrite(ev.where(F.col("event_id") % 3 == 0))
     t3.delete_where(F.col("event_type") == "click", mode="merge_on_read")
     t3.merge(
@@ -151,11 +148,11 @@ def test_non_replayable_history_refuses(table, spark):
         )
     )
     with pytest.raises(ValueError, match="outstanding"):
-        _reader().partitions({"version": 1}, {"version": 2})
+        _reader(t3).partitions({"version": 1}, {"version": 2})
 
 
 def test_empty_range_yields_one_empty_partition(table):
-    r = _reader()
+    r = _reader(table[0])
     parts = r.partitions({"version": 0}, {"version": 0})
     assert len(parts) == 1
     assert list(r.read(parts[0])) == []
@@ -169,7 +166,7 @@ def test_compaction_emits_no_phantom_changes(table, spark):
     t, ev = table
     t.append(ev.where(F.col("event_id") % 3 == 1))  # v1: fragment
     t.optimize()                                    # v2: full rewrite
-    assert _changes(_reader(), 1, 2) == []
+    assert _changes(_reader(t), 1, 2) == []
 
 
 def test_dv_coalesce_is_not_streamable(table):
@@ -180,7 +177,7 @@ def test_dv_coalesce_is_not_streamable(table):
     t.delete_where(F.col("event_type") == "click", mode="merge_on_read")
     t.delete_where(F.col("event_type") == "view", mode="merge_on_read")
     v = t.coalesce_deletion_vectors()
-    r = _reader()
+    r = _reader(t)
     # the two DELETE commits stream fine...
     assert {row["_change_type"] for row in _changes(r, 0, 2)} == {"delete"}
     # ...the coalesce commit refuses
@@ -192,7 +189,7 @@ def test_pre_stream_schema_evolution_null_fills_preimages(table, spark):
     """ADVICE r11 #2: a column added by merge_schema BEFORE the streamed
     range must not crash pre-image reads of older files (ArrowInvalid
     'No match for FieldRef') — the scan is pinned to the manifest
-    schema, like the batch _reader(), and old files serve NULL."""
+    schema, like the batch _reader(t), and old files serve NULL."""
     t, ev = table
     t.append(  # v1: schema evolution — v0's files lack `extra`
         ev.where(F.col("event_id") % 3 == 1).withColumn("extra", F.lit(1)),
@@ -204,7 +201,7 @@ def test_pre_stream_schema_evolution_null_fills_preimages(table, spark):
             "event_id bigint, event_type string, value double, extra int",
         )
     )
-    rows = _changes(_reader(start=1), 1, 2)
+    rows = _changes(_reader(t, start=1), 1, 2)
     assert rows, "evolved-history pre-image read returned nothing"
     pre = {r["event_id"]: r for r in rows if r["_change_type"] == "update_preimage"}
     # pre-images from v0-era files null-fill the later-added column
@@ -213,44 +210,42 @@ def test_pre_stream_schema_evolution_null_fills_preimages(table, spark):
     assert {r["extra"] for r in post.values()} == {2}
     # DV deletes across the same evolved history: also pinned-schema
     t.delete_where(F.col("event_id") == 6, mode="merge_on_read")  # v3: v0-era row
-    dels = [r for r in _changes(_reader(start=2), 2, 3) if r["_change_type"] == "delete"]
+    dels = [r for r in _changes(_reader(t, start=2), 2, 3) if r["_change_type"] == "delete"]
     assert [r["event_id"] for r in dels] == [6]
     assert dels[0]["extra"] is None
 
 
-def test_nan_passthrough_emits_no_spurious_updates(spark):
+def test_nan_passthrough_emits_no_spurious_updates(spark, tmp_path):
     """ADVICE r11 #4: NaN != NaN in naive float equality — a bucket
     rewrite that copies a NaN-valued row through unchanged must not
     emit an update_preimage/update_postimage pair for it."""
-    shutil.rmtree(BASE, ignore_errors=True)
-    t = ManifestVersionedTable(spark, BASE, key="event_id", n_buckets=1)
-    try:
-        t.overwrite(
-            spark.createDataFrame(
-                [(1, "a", float("nan")), (2, "b", 5.0)],
-                "event_id bigint, event_type string, value double",
-            )
+    t = ManifestVersionedTable(
+        spark, str(tmp_path / "t"), key="event_id", n_buckets=1
+    )
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", float("nan")), (2, "b", 5.0)],
+            "event_id bigint, event_type string, value double",
         )
-        t.merge(  # rewrites the single bucket; row 1 (NaN) copies through
-            spark.createDataFrame(
-                [(2, "b", 6.0)], "event_id bigint, event_type string, value double"
-            )
+    )
+    t.merge(  # rewrites the single bucket; row 1 (NaN) copies through
+        spark.createDataFrame(
+            [(2, "b", 6.0)], "event_id bigint, event_type string, value double"
         )
-        rows = _changes(_reader(), 0, 1)
-        assert {r["event_id"] for r in rows} == {2}
-        # NaN -> 7.0 IS a change and must still be emitted
-        t.merge(
-            spark.createDataFrame(
-                [(1, "a", 7.0)], "event_id bigint, event_type string, value double"
-            )
+    )
+    rows = _changes(_reader(t), 0, 1)
+    assert {r["event_id"] for r in rows} == {2}
+    # NaN -> 7.0 IS a change and must still be emitted
+    t.merge(
+        spark.createDataFrame(
+            [(1, "a", 7.0)], "event_id bigint, event_type string, value double"
         )
-        rows = _changes(_reader(start=1), 1, 2)
-        assert {(r["event_id"], r["_change_type"]) for r in rows} == {
-            (1, "update_preimage"),
-            (1, "update_postimage"),
-        }
-    finally:
-        shutil.rmtree(BASE, ignore_errors=True)
+    )
+    rows = _changes(_reader(t, start=1), 1, 2)
+    assert {(r["event_id"], r["_change_type"]) for r in rows} == {
+        (1, "update_preimage"),
+        (1, "update_postimage"),
+    }
 
 
 def test_full_history_replay_from_version_minus_one(table, spark):
@@ -266,7 +261,7 @@ def test_full_history_replay_from_version_minus_one(table, spark):
             "event_id bigint, event_type string, value double",
         )
     )
-    r = ManifestCDFStreamReader({"path": BASE, "startingVersion": -1})
+    r = ManifestCDFStreamReader({"path": t.path, "startingVersion": -1})
     assert r.initialOffset() == {"version": -1}
     rows = _changes(r, -1, 2)
     v0_inserts = [x for x in rows if x["_commit_version"] == 0]
@@ -285,14 +280,15 @@ def test_full_history_replay_from_version_minus_one(table, spark):
 
 
 def test_starting_version_out_of_range_is_loud(table):
+    path = table[0].path
     """ADVICE r12: startingVersion below -1 (or past the latest commit)
     rejects up front with a message naming the -1 full-replay sentinel,
     instead of a confusing 'version N does not exist' later inside
     partitions()."""
     with pytest.raises(ValueError, match="full-history replay"):
-        ManifestCDFStreamReader({"path": BASE, "startingVersion": -5})
+        ManifestCDFStreamReader({"path": path, "startingVersion": -5})
     with pytest.raises(ValueError, match="full-history replay"):
-        ManifestCDFStreamReader({"path": BASE, "startingVersion": 999})
+        ManifestCDFStreamReader({"path": path, "startingVersion": 999})
     # the sentinel itself and the latest version both construct fine
-    ManifestCDFStreamReader({"path": BASE, "startingVersion": -1})
-    ManifestCDFStreamReader({"path": BASE})
+    ManifestCDFStreamReader({"path": path, "startingVersion": -1})
+    ManifestCDFStreamReader({"path": path})

@@ -5,40 +5,39 @@ snapshot, and non-append history / schema drift are refused loudly
 
 from __future__ import annotations
 
-import shutil
-
 import pytest
 from pyspark.sql import functions as F
 
 from pucminas_data_pipelines_spark.operators.upsert import ManifestVersionedTable
+from pucminas_data_pipelines_spark.sources.manifest_cdf import (
+    ManifestCDFStreamReader,
+)
 from pucminas_data_pipelines_spark.sources.manifest_stream import (
     ManifestStreamReader,
 )
 from pucminas_data_pipelines_spark.tables import load_table
 from tests.conftest import SF_SMOKE
 
-BASE = "/root/repo/.tmp/test_manifest_stream"
-
 
 @pytest.fixture()
-def table(spark):
-    shutil.rmtree(BASE, ignore_errors=True)
-    t = ManifestVersionedTable(spark, BASE, key="event_id", n_buckets=2)
+def table(spark, tmp_path):
+    t = ManifestVersionedTable(
+        spark, str(tmp_path / "t"), key="event_id", n_buckets=2
+    )
     ev = load_table(spark, SF_SMOKE, "events").select(
         "event_id", "event_type", "value"
     )
     t.overwrite(ev.where(F.col("event_id") % 2 == 0))
-    yield t, ev
-    shutil.rmtree(BASE, ignore_errors=True)
+    return t, ev
 
 
-def _reader() -> ManifestStreamReader:
-    return ManifestStreamReader({"path": BASE})
+def _reader(t) -> ManifestStreamReader:
+    return ManifestStreamReader({"path": t.path})
 
 
 def test_initial_batch_is_snapshot_then_appends_are_diffs(table, spark):
     t, ev = table
-    r = _reader()
+    r = _reader(t)
     assert r.initialOffset() == {"version": -1}
     assert r.latestOffset() == {"version": 0}
     snap, cols = r._added_dirs(-1, 0)
@@ -56,7 +55,7 @@ def test_initial_batch_is_snapshot_then_appends_are_diffs(table, spark):
 def test_partitions_read_exactly_the_appended_rows(table, spark):
     t, ev = table
     t.append(ev.where(F.col("event_id") % 2 == 1))
-    r = _reader()
+    r = _reader(t)
     parts = r.partitions({"version": 0}, {"version": 1})
     n = 0
     for p in parts:
@@ -66,7 +65,7 @@ def test_partitions_read_exactly_the_appended_rows(table, spark):
 
 
 def test_empty_range_yields_one_empty_partition(table):
-    r = _reader()
+    r = _reader(table[0])
     parts = r.partitions({"version": 0}, {"version": 0})
     assert len(parts) == 1
     assert list(r.read(parts[0])) == []
@@ -75,7 +74,7 @@ def test_empty_range_yields_one_empty_partition(table):
 def test_non_append_commit_is_refused(table, spark):
     t, _ = table
     t.delete_where(F.col("event_type") == "click")
-    r = _reader()
+    r = _reader(t)
     with pytest.raises(ValueError, match="APPEND-only"):
         r._added_dirs(0, 1)
 
@@ -83,7 +82,7 @@ def test_non_append_commit_is_refused(table, spark):
 def test_deletion_vector_commit_is_refused(table, spark):
     t, _ = table
     t.delete_where(F.col("event_type") == "click", mode="merge_on_read")
-    r = _reader()
+    r = _reader(t)
     with pytest.raises(ValueError, match="deletion vectors|APPEND-only"):
         r._added_dirs(0, 1)
 
@@ -96,14 +95,14 @@ def test_schema_evolution_is_refused_mid_stream(table, spark):
         ),
         merge_schema=True,
     )
-    r = _reader()
+    r = _reader(t)
     with pytest.raises(ValueError, match="schema changed"):
         r._added_dirs(0, 1)
 
 
-def test_missing_table_is_loud():
+def test_missing_table_is_loud(tmp_path):
     with pytest.raises(ValueError, match="no manifest table"):
-        ManifestStreamReader({"path": "/root/repo/.tmp/nope_mvt"})
+        ManifestStreamReader({"path": str(tmp_path / "nope_mvt")})
 
 
 def test_restart_resumes_from_checkpointed_offsets(spark, table, tmp_path):
@@ -121,7 +120,7 @@ def test_restart_resumes_from_checkpointed_offsets(spark, table, tmp_path):
     def run_once():
         q = (
             spark.readStream.format("manifest_stream")
-            .option("path", BASE)
+            .option("path", t.path)
             .load()
             .writeStream.format("parquet")
             .option("path", out)
@@ -159,7 +158,7 @@ def test_initial_snapshot_subtracts_deletion_vectors(table, spark):
     t, ev = table
     t.delete_where(F.col("event_type") == "click", mode="merge_on_read")
     t.delete_where(F.col("event_type") == "view", mode="merge_on_read")
-    r = _reader()
+    r = _reader(t)
     v = t.latest_version()
     rows = []
     for p in r.partitions({"version": -1}, {"version": v}):
@@ -183,7 +182,7 @@ def test_append_after_dv_snapshot_tails_fine(table, spark):
     old truthiness guard bricked the snapshot-then-tail workflow."""
     t, ev = table
     t.delete_where(F.col("event_type") == "click", mode="merge_on_read")
-    r = _reader()
+    r = _reader(t)
     v_dv = t.latest_version()
     # drain the DV-subtracted snapshot (establishes the baseline)
     n_snap = sum(
@@ -207,7 +206,16 @@ def test_append_after_dv_snapshot_tails_fine(table, spark):
         r._added_dirs(v_app, t.latest_version())
 
 
-def test_max_versions_per_trigger_bounds_each_batch(table, spark):
+# both readers share the offset protocol; the CDF reader replays from
+# before version 0, so its offsets start at -1 like the snapshot reader's
+_RATE_LIMITED_READERS = {
+    "manifest_stream": (ManifestStreamReader, {}),
+    "manifest_cdf": (ManifestCDFStreamReader, {"startingVersion": "-1"}),
+}
+
+
+@pytest.mark.parametrize("source", sorted(_RATE_LIMITED_READERS))
+def test_max_versions_per_trigger_bounds_each_batch(table, spark, source):
     """Delta maxFilesPerTrigger analogue: with a 10-commit backlog and
     maxVersionsPerTrigger=3, the offset sequence drains in bounded
     steps (never more than 3 versions per batch) and still reaches the
@@ -219,9 +227,9 @@ def test_max_versions_per_trigger_bounds_each_batch(table, spark):
                 "event_id", "event_type", "value"
             )
         )
-    r = ManifestStreamReader(
-        {"path": BASE, "maxVersionsPerTrigger": "3"}
-    )
+    cls, extra = _RATE_LIMITED_READERS[source]
+    opts = {"path": t.path, "maxVersionsPerTrigger": "3", **extra}
+    r = cls(opts)
     offsets = [r.initialOffset()["version"]]
     seen_rows = 0
     while offsets[-1] < t.latest_version():
@@ -239,7 +247,7 @@ def test_max_versions_per_trigger_bounds_each_batch(table, spark):
     assert seen_rows == t.read().count()
     # restart-safety: a fresh reader (checkpoint resume) must not cap
     # its first latestOffset below the resumed start
-    r2 = ManifestStreamReader({"path": BASE, "maxVersionsPerTrigger": "3"})
+    r2 = cls(opts)
     assert r2.latestOffset()["version"] == t.latest_version()  # uncapped
     r2.partitions({"version": 8}, {"version": t.latest_version()})
     # capped from the second trigger on, relative to observed progress
@@ -260,7 +268,7 @@ def test_initial_snapshot_null_fills_pre_evolution_files(table, spark):
         ev.where(F.col("event_id") % 2 == 1).withColumn("extra", F.lit(7)),
         merge_schema=True,
     )
-    r = _reader()
+    r = _reader(t)
     v = t.latest_version()
     rows = []
     for p in r.partitions({"version": -1}, {"version": v}):

@@ -135,6 +135,24 @@ def test_generate_manifest_lists_latest_files(spark, tmp_path):
     assert {os.path.dirname(f) for f in files} == latest_dirs
 
 
+def test_generate_manifest_refuses_outstanding_deletion_vectors(spark, tmp_path):
+    """A symlink manifest is a bare file list: with merge-on-read deletes
+    outstanding it would hand external readers the deleted rows, so it
+    refuses until optimize() materializes them, then lists exactly the
+    surviving rows."""
+    t = ManifestVersionedTable(spark, str(tmp_path / "t"), key="id", n_buckets=1)
+    t.overwrite(_rows(spark, [(i, f"n{i}", float(i)) for i in range(10)]))
+    t.delete_where(F.col("score") >= 5, mode="merge_on_read")
+    assert t.read().count() == 5
+    with pytest.raises(ValueError, match="optimize\\(\\) first"):
+        t.generate_manifest()
+    t.optimize()
+    files = [ln for ln in open(t.generate_manifest()).read().splitlines() if ln]
+    got = spark.read.parquet(*files).select("id", "name", "score")
+    assert canon(got.collect()) == canon(t.read().collect())
+    assert got.count() == 5
+
+
 def test_version_diff_cdc_works_on_manifest_table(spark, tmp_path):
     """version_diff over a merge (bucket-grain fast path) must emit
     exactly the model's CDC rows: update pre/post pairs, inserts —

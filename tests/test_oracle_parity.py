@@ -40,8 +40,11 @@ def test_oracle_parity_window_at_bench_sf(spark, name):
 
 
 def test_every_query_runs_at_smoke_scale(spark):
+    """Queries without an oracle still have to run at smoke scale. The
+    oracled ones already run (and are compared) at this scale in
+    test_oracle_parity_second_sf, so they are not run twice."""
     from tests.conftest import SF_SMOKE
 
-    for name, fn in QUERIES.items():
-        df = fn(spark, SF_SMOKE)
+    for name in sorted(set(QUERIES) - set(ORACLES)):
+        df = QUERIES[name](spark, SF_SMOKE)
         assert df.count() >= 0, name

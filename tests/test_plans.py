@@ -8,8 +8,6 @@ here long before a benchmark would catch it."""
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import functions as F
 
 from pucminas_data_pipelines_spark.plans import QUERIES
@@ -66,19 +64,15 @@ def test_column_pruning_narrow_read_schema(spark):
     assert "ReadSchema: struct<o_orderkey:bigint,o_totalprice:double>" in plan
 
 
-def test_partition_pruning_on_partitioned_sink(spark):
-    path = "/root/repo/.tmp/test_prune"
-    shutil.rmtree(path, ignore_errors=True)
-    try:
-        l = load_table(spark, SF_SMOKE, "lineitem")
-        l.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
-        pruned = spark.read.parquet(path).where(F.col("l_returnflag") == "A")
-        plan = _plan(pruned)
-        assert "PartitionFilters: [isnotnull(l_returnflag" in plan
-        n_a = pruned.count()
-        assert n_a == l.where(F.col("l_returnflag") == "A").count()
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
+def test_partition_pruning_on_partitioned_sink(spark, tmp_path):
+    path = str(tmp_path / "prune")
+    l = load_table(spark, SF_SMOKE, "lineitem")
+    l.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
+    pruned = spark.read.parquet(path).where(F.col("l_returnflag") == "A")
+    plan = _plan(pruned)
+    assert "PartitionFilters: [isnotnull(l_returnflag" in plan
+    n_a = pruned.count()
+    assert n_a == l.where(F.col("l_returnflag") == "A").count()
 
 
 def test_events_scan_pushdown_survives_ts_conversion(spark):

@@ -9,7 +9,7 @@ import shutil
 from pyspark.sql import functions as F
 
 from pucminas_data_pipelines_spark.plans import QUERIES
-from pucminas_data_pipelines_spark.plans.mutation import _TMP
+from pucminas_data_pipelines_spark.io import scratch_path
 from pucminas_data_pipelines_spark.streaming import jobs
 from tests.conftest import SF_SMOKE
 
@@ -41,7 +41,7 @@ def test_streaming_dedup_counts(spark):
 
 
 def test_foreachbatch_upsert_sink(spark):
-    path = f"{_TMP}/test_stream_upsert"
+    path = scratch_path("test_stream_upsert")
     shutil.rmtree(path, ignore_errors=True)
     try:
         events = jobs.read_events_stream(spark, SF_SMOKE).select(
@@ -167,7 +167,7 @@ def test_foreachbatch_upsert_live_is_incremental(spark):
 
     QUERIES["streaming_foreachbatch_upsert_live"](spark, SF_SMOKE).collect()
     table = ManifestVersionedTable(
-        spark, f"{_TMP}/stream_upsert_live/table", key="user_id"
+        spark, scratch_path("stream_upsert_live", "table"), key="user_id"
     )
     assert table.history() == [0, 1, 2, 3]
 
